@@ -17,9 +17,26 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time — every day-truncation in the engine assumes it;
   *  - nanosAsLong for the fixture parquet's TIMESTAMP(NANOS);
   *  - the graft extension functions (native DotProductQ) registered at
-  *    build time.
+  *    build time, with the physical rules that ride along (cached-scan
+  *    wrap, time-literal binding);
+  *  - a generated-class cache sized to the working set
+  *    ([[CodegenCacheEntries]]): with time literals bound out of the
+  *    source, a repeated query shape compiles once per session — but
+  *    only if its classes are still cached when it comes round again.
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries`, a static conf (fixed when the
+    * first session of the JVM builds). Spark's default LRU holds 100
+    * classes; one 14-panel dashboard cycle needs about 200, and one pass
+    * of the 235-query pack compiled 2,104 distinct classes at sf0.01
+    * (about 2,400 after a second pass) — so 100 evicted every class
+    * before its next use. 4,000 holds the pack's working set with room
+    * for the stale one-off classes the LRU drops first. Retained
+    * classes cost heap: the dashboard benchmark keeps about 220 and
+    * read +5 MiB (+5%) live heap against the 100-entry cache.
+    */
+  val CodegenCacheEntries: Int = 4000
 
   def configure(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cores.toString)
@@ -59,6 +76,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Harness entry: local master with `cores` threads. */
   def local(cores: Int): SparkSession = {

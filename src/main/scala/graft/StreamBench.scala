@@ -3,9 +3,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev profiler for the streaming gate block: times every `*_stream`
   * query (Bench-style min-of-2 after a warm run) in one JVM and prints a
-  * per-gate table plus the block total. Used to A/B the state-store
-  * provider (run once plain, once with GRAFT_STATESTORE=rocksdb) and to
-  * attribute stream-block cost without paying a full Bench pass.
+  * per-gate table plus the block total, to attribute stream-block cost
+  * without paying a full Bench pass.
   * Usage: runMain graft.StreamBench [sfDir]
   */
 object StreamBench {
@@ -33,7 +32,7 @@ object StreamBench {
       println(f"STREAMBENCH $name%-28s ${sec}%.3f")
       name -> sec
     }
-    println(f"STREAMBENCH TOTAL ${times.map(_._2).sum}%.3f over ${times.size} gates (provider=${sys.env.getOrElse("GRAFT_STATESTORE", "hdfs")})")
+    println(f"STREAMBENCH TOTAL ${times.map(_._2).sum}%.3f over ${times.size} gates")
     spark.stop()
   }
 }

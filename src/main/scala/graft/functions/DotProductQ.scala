@@ -143,5 +143,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // ever created above a session artifact
     ext.injectQueryStagePrepRule(_ =>
       org.apache.spark.sql.execution.graft.GraftWrapCachedScans())
+    // time bounds out of generated source (BindLiterals.scala): a query
+    // re-run at a new "now" reuses the classes compiled for the last run
+    ext.injectQueryStagePrepRule(_ =>
+      org.apache.spark.sql.execution.graft.GraftBindLiterals())
   }
 }

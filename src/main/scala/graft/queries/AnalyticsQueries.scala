@@ -754,12 +754,7 @@ object AnalyticsQueries {
         // not throughput. Production sizing is the opposite
         // (partitions ≈ cores); results are partition-count-independent
         // either way (every gate hash-matches at all three SFs).
-        // GRAFT_STREAM_PARTS: A/B lever (round 19) — the measurement
-        // above predates the NIO checkpoint manager + checksum disable,
-        // which cut the per-partition commit tax ~300×; re-measured
-        // below.
-        s.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_STREAM_PARTS", "1"))
+        s.conf.set("spark.sql.shuffle.partitions", "1")
         // NIO atomic writes for the local checkpoints (round 18): the
         // Hadoop local create path costs ~33 ms/file without the native
         // library vs ~0.1 ms raw NIO on the same tmpfs (CkptIoProbe),
@@ -783,21 +778,13 @@ object AnalyticsQueries {
         if (!sys.env.get("GRAFT_CKPT_CRC").contains("on"))
           s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
             "false")
-        // State-store provider is switchable for measurement
-        // (GRAFT_STATESTORE=rocksdb): Spark 4 ships RocksDBStateStoreProvider
-        // to cut the HDFS-backed store's per-commit cost at LARGE state.
-        // Measured on the ten gates at sf0.1 (README "Design choices"):
-        // these fixtures keep ≤ a few thousand rows of state, where
-        // RocksDB's per-store native init outweighs its commit savings —
-        // HDFS-backed (default) wins on every gate, so it stays the
-        // default and production-scale state is where rocksdb earns
-        // the flip.
-        sys.env.get("GRAFT_STATESTORE").foreach {
-          case "rocksdb" => s.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          case _ => ()
-        }
+        // State store: Spark's default HDFS-backed provider. Spark 4's
+        // RocksDBStateStoreProvider cuts the per-commit cost at LARGE
+        // state; measured on the ten gates at sf0.1, these fixtures keep
+        // ≤ a few thousand rows of state, where RocksDB's per-store
+        // native init outweighs its commit savings — HDFS-backed won on
+        // every gate. Production-scale state is where RocksDB earns the
+        // switch.
         // diagnostics lever: per-micro-batch duration breakdown on
         // stderr (GRAFT_STREAM_PROGRESS=1) — attributes gate cost to
         // planning/state-commit/sink phases without a full profiler

@@ -110,6 +110,11 @@ fi
 echo "== sbt test"
 sbt -batch test
 
+# the benchmark's own logic (seeding, percentile rule, span arithmetic,
+# output checks); needs no Spark
+echo "== perfbench unit tests"
+python3 -m unittest discover -s perfbench -p 'test_*.py'
+
 for sf in sf0.001 sf0.01 sf0.1; do
   echo "== verify $sf"
   out="/tmp/graft_gate_$sf"
