@@ -230,12 +230,22 @@ object EventsIngest {
           math.max(16, spark.sparkContext.defaultParallelism),
           col("skey")))
 
-  /** Partitioned-parquet writer for the fact table: partition by
+  /** Partitioned-parquet writer for the fact table, and its only writer
+    * (collection, repair and the stream sink all land here): partition by
     * `collect_date` (+ query_id) so repair/retention are partition ops
     * (SURVEY §1.4, §2.2 W7/W8). At 100 TB this layout gives partition
     * pruning on the two hottest predicates for free.
+    *
+    * The rows are clustered on the partition key first (`REBALANCE`), so
+    * each partition directory a write touches gets one file: unclustered,
+    * every input partition writes its own file into every directory it
+    * holds rows for (up to 16 per directory from the series-hashed fact
+    * frame). Unlike `repartition` or `coalesce(1)`, a rebalance lets AQE
+    * split a partition larger than the advisory size across tasks, so a
+    * 100 TB day still writes in parallel.
     */
   def writeFactTable(df: DataFrame, path: String, mode: String = "append"): Unit =
     df.withColumn("collect_date", to_date(col("collected_at")))
+      .hint("rebalance", col("collect_date"), col("query_id"))
       .write.partitionBy("collect_date", "query_id").mode(mode).parquet(path)
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.QueryConfig
 
@@ -35,12 +35,17 @@ final class ConfigStore(spark: SparkSession, path: String) {
     // self-heal the rename crash window: data is always intact in .old
     if (!fs.exists(p(path)) && fs.exists(p(path + ".old")))
       fs.rename(p(path + ".old"), p(path))
-    spark.read.parquet(path).as[QueryConfig]
+    // the encoder's schema, not footer inference (a Spark job per read)
+    spark.read.schema(Encoders.product[QueryConfig].schema).parquet(path)
+      .as[QueryConfig]
   }
 
-  /** S7: enabled configs, oldest first (database_config.go:11-91). */
+  /** S7: enabled configs, oldest first (database_config.go:11-91). The
+    * table is tens of rows: one task sorts it, where `orderBy` would
+    * start a range-sampling job and a shuffle.
+    */
   def loadEnabled(): Dataset[QueryConfig] =
-    loadAll().filter(col("enabled")).orderBy(col("query_id"))
+    loadAll().filter(col("enabled")).coalesce(1).sortWithinPartitions(col("query_id"))
 
   /** S8: single-config lookup, enabled only (cmd/repair/main.go:415-460). */
   def get(queryId: String): Option[QueryConfig] =

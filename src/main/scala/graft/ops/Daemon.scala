@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ext.CacheScope
 import graft.model.{QueryConfig, QueryExecution}
 import java.time.Instant
 import java.util.concurrent.atomic.AtomicBoolean
@@ -51,7 +52,7 @@ final class Daemon(
         catch {
           case e: Exception =>
             onResult(Left(runner.failedExecution(cfg, e, started)))
-        }
+        } finally CacheScope.drain() // release the run's persisted records
       } finally inFlight.set(false)
     }
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ext.CacheScope
 import graft.model.{QueryConfig, QueryExecution}
 import graft.promql.PromOps
 import graft.time.TimeResolver
@@ -34,10 +35,13 @@ final class QueryRunner(
     */
   def execute(cfg: QueryConfig): RunResult = {
     val started = Instant.now()
-    val records = cfg.time_range_type match {
+    // persisted so the audit count fills the cache the caller's write
+    // reads, instead of evaluating the query twice; the records live
+    // until the caller's next CacheScope.drain()
+    val records = CacheScope.persistTracked(cfg.time_range_type match {
       case "range" => executeRange(cfg)
       case _       => executeInstant(cfg)
-    }
+    })
     val n = records.count()
     val ended = Instant.now()
     RunResult(records, QueryExecution(

@@ -1,19 +1,23 @@
 package graft.repair
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.storage.StorageLevel
+import graft.ingest.EventsIngest
 import java.time.LocalDate
 
 /** Backfill / repair (reference: cmd/repair/main.go; SURVEY §2.6) over the
   * partitioned fact table.
   *
-  * Where the reference loops day-by-day with a per-day existence check and
-  * a 100 ms throttle, the Spark shape is ONE batch job: build the
-  * candidate-day frame, LEFT ANTI join against the days that already have
-  * data (J1 — the single join in the reference system), recompute only the
-  * missing days, and land them with *dynamic partition overwrite* (W8) so
-  * a re-run, a crash-retry, or a force-recompute all converge to the same
-  * table state. Because the fact table is partitioned by
+  * Like the reference, the plan is a per-day existence check — but on
+  * partition directories, not rows: a day exists for a query when
+  * `collect_date=<day>/query_id=<id>` holds a data file, so planning costs
+  * one metadata call per requested day and no Spark job, whatever the
+  * table size. The missing days (or all of them, when forced) are then
+  * recomputed in ONE batch and landed with *dynamic partition overwrite*
+  * (W8), so a re-run, a crash-retry, or a force-recompute all converge to
+  * the same table state. Because the fact table is partitioned by
   * (collect_date, query_id), every write and delete here touches only the
   * affected partitions — no read-modify-write of the whole table at any
   * scale.
@@ -24,24 +28,28 @@ object Repair {
   def configure(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-  /** Inclusive day range as a one-column frame of DateType. */
-  def candidateDays(spark: SparkSession, start: LocalDate, end: LocalDate): DataFrame =
-    spark.range(1).select(explode(expr(
-      s"sequence(DATE '$start', DATE '$end', INTERVAL 1 DAY)")).as("day"))
-
-  /** J1: days in [start, end] with no data for `queryId`. Reads only
-    * partition metadata-level columns (collect_date, query_id) — with
-    * partition pruning this never scans fact rows.
+  /** J1: days in [start, end] with no data for `queryId`, in order.
+    * Probes each day's partition directory,
+    * `collect_date=<day>/query_id=<escaped id>`, through the fact path's
+    * own FileSystem: a day is present when its directory holds a data
+    * file (any file whose name does not start with `_` or `.`, the names
+    * Spark's file index skips). O(days in range) listing calls and no
+    * Spark job; a missing table means every day is missing.
     */
   def missingDays(spark: SparkSession, factPath: String, queryId: String,
-      start: LocalDate, end: LocalDate): DataFrame = {
-    val existing = spark.read.parquet(factPath)
-      .filter(col("query_id") === queryId)
-      .select(col("collect_date").cast("date").as("have_day"))
-      .distinct()
-    val cand = candidateDays(spark, start, end)
-    cand.join(broadcast(existing), cand("day") === existing("have_day"), "left_anti")
+      start: LocalDate, end: LocalDate): Seq[LocalDate] = {
+    val base = new Path(factPath)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val queryDir = ExternalCatalogUtils.getPartitionPathString("query_id", queryId)
+    def hasData(day: LocalDate): Boolean =
+      try fs.listStatus(new Path(base, s"collect_date=$day/$queryDir"))
+        .exists(st => st.isFile && !st.getPath.getName.matches("[_.].*"))
+      catch { case _: java.io.FileNotFoundException => false }
+    daysIn(start, end).filterNot(hasData)
   }
+
+  private def daysIn(start: LocalDate, end: LocalDate): Seq[LocalDate] =
+    Iterator.iterate(start)(_.plusDays(1)).takeWhile(!_.isAfter(end)).toSeq
 
   /** Repair plan entry: what would be done per day (J5 dry-run output). */
   final case class DayPlan(day: LocalDate, action: String) // recompute|skip|overwrite
@@ -49,15 +57,14 @@ object Repair {
   /** J5: the per-day plan without any writes (repair/main.go:35, 200-212). */
   def plan(spark: SparkSession, factPath: String, queryId: String,
       start: LocalDate, end: LocalDate, force: Boolean): Seq[DayPlan] = {
-    val missing = missingDays(spark, factPath, queryId, start, end)
-      .collect().map(_.getDate(0).toLocalDate).toSet
-    Iterator.iterate(start)(_.plusDays(1)).takeWhile(!_.isAfter(end)).map { d =>
+    val missing = missingDays(spark, factPath, queryId, start, end).toSet
+    daysIn(start, end).map { d =>
       val action =
         if (missing(d)) "recompute"
         else if (force) "overwrite" // J2 force-recompute
         else "skip" // J1 idempotent skip
       DayPlan(d, action)
-    }.toSeq
+    }
   }
 
   /** Execute a repair: recompute the given days with `compute` (a function
@@ -75,13 +82,18 @@ object Repair {
     val days = thePlan.filter(_.action != "skip").map(_.day)
     if (days.isEmpty) return RepairSummary(0, 0, thePlan)
     try {
+      // evaluate once: the count fills the cache the write then reads.
+      // A frame some other owner already cached is used as is, and left
+      // cached.
       val records = compute(days)
-        .withColumn("collect_date", to_date(col("collected_at")))
-      val n = records.count()
-      if (n > 0) // J4: never replace existing data with nothing
-        records.write.mode("overwrite")
-          .partitionBy("collect_date", "query_id").parquet(factPath)
-      RepairSummary(days.size, n, thePlan)
+      val owned = records.storageLevel == StorageLevel.NONE
+      if (owned) records.persist()
+      try {
+        val n = records.count()
+        if (n > 0) // J4: never replace existing data with nothing
+          EventsIngest.writeFactTable(records, factPath, "overwrite")
+        RepairSummary(days.size, n, thePlan)
+      } finally if (owned) records.unpersist(blocking = false)
     } catch {
       // J3: the source has aged past these days — mark them unrepairable
       // and keep whatever data exists instead of failing the whole batch
@@ -119,8 +131,10 @@ object Repair {
     */
   def retentionDelete(spark: SparkSession, factPath: String, cutoff: LocalDate): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(conf)
-    val base = new org.apache.hadoop.fs.Path(factPath)
+    val base = new Path(factPath)
+    // the fact path's own FS, not the default one: a file:// table under
+    // an hdfs:// default must list and delete on the local FS
+    val fs = base.getFileSystem(conf)
     if (!fs.exists(base)) return 0L
     val doomed = fs.listStatus(base).toSeq
       .filter(_.isDirectory)

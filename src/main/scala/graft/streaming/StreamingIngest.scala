@@ -35,11 +35,7 @@ object StreamingIngest {
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val records = transform(batch)
-          .withColumn("collect_date", to_date(col("collected_at")))
-        records.write.mode("overwrite")
-          .partitionBy("collect_date", "query_id")
-          .parquet(factPath)
+        graft.ingest.EventsIngest.writeFactTable(transform(batch), factPath, "overwrite")
       }
       .start()
   }

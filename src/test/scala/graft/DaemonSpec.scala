@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.model.QueryConfig
 import graft.ops.{Daemon, EnvConfig, QueryRunner}
 import java.nio.file.Files
@@ -63,5 +64,31 @@ class DaemonSpec extends SparkSpec {
     assert(seen.count(_ == "daily") >= 1)
     // the every-second cron fired on ticks (O1)
     assert(seen.count(_ == "every_sec") >= 2)
+  }
+
+  test("O1: each run's persisted records are released after its result") {
+    val runner = new QueryRunner(metrics, Instant.parse("2024-01-31T00:00:00Z"))
+    val cachedAtResult = new ConcurrentLinkedQueue[Boolean]()
+    val records = new ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+    val base = Instant.parse("2024-01-31T01:00:00Z")
+    val ticks = new java.util.concurrent.atomic.AtomicLong(0)
+    val daemon = new Daemon(runner, Seq(cfg("every_sec", "* * * * * *")),
+      onResult = r => r.foreach { res =>
+        cachedAtResult.add(res.records.storageLevel != StorageLevel.NONE)
+        records.add(res.records)
+      },
+      clock = () => base.plusSeconds(ticks.getAndIncrement()),
+      tickMs = 50L)
+    daemon.start(catchUp = true)
+    val deadline = System.currentTimeMillis() + 60000
+    while (records.size < 4 && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    assert(daemon.stop(graceMs = 10000L))
+    assert(records.size >= 4)
+    // the count filled a cache the callback could read from ...
+    assert(cachedAtResult.toArray.forall(_ == true))
+    // ... and none of it outlives the run
+    assert(records.toArray(Array.empty[org.apache.spark.sql.DataFrame])
+      .forall(_.storageLevel == StorageLevel.NONE))
   }
 }

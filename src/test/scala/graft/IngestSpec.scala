@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ingest.{CollectedAt, SampleConversion}
+import graft.ingest.{CollectedAt, EventsIngest, SampleConversion}
+import java.nio.file.{Files, Path}
 import java.time.Instant
+import scala.jdk.CollectionConverters._
 
 /** Wire-format conversion (T1-T8) and the collected_at state machine (T9,
   * SURVEY §1.4) — the branch vectors from FIXTURES.md §3.
@@ -88,5 +90,36 @@ class IngestSpec extends SparkSpec {
     // default -> per-sample day; invariant: always midnight
     val dflt = CollectedAt.derive("instant", Some("now"), None, ts, now)
     assert(eval(dflt).toInstant == Instant.parse("2024-01-15T00:00:00Z"))
+  }
+
+  test("W1: the fact writer lands one file per (collect_date, query_id) partition") {
+    // 16 input partitions, each holding rows of all 3 days x 2 query ids
+    val input = spark.range(0, 4800, 1, 16).select(
+      when(col("id") % 2 === 0, "qa").otherwise("qb").as("query_id"),
+      lit("m").as("metric_name"),
+      map(lit("n"), col("id").cast("string")).as("labels"),
+      (col("id") * 0.25).as("value"),
+      timestamp_seconds(lit(1704067200L) + (col("id") % 3) * 86400 + col("id")).as("timestamp"),
+      lit("instant").as("result_type"),
+      timestamp_seconds(lit(1704067200L) + (col("id") % 3) * 86400).as("collected_at"))
+    assert(input.rdd.getNumPartitions == 16)
+    val path = Files.createTempDirectory("factw").resolve("fact")
+    EventsIngest.writeFactTable(input, path.toString)
+
+    def children(p: Path): Seq[Path] = {
+      val s = Files.list(p); try s.iterator().asScala.toSeq finally s.close()
+    }
+    val dataFiles = children(path).filter(Files.isDirectory(_)).flatMap(children)
+      .map(dir => dir.getParent.getFileName + "/" + dir.getFileName ->
+        children(dir).count(f => !f.getFileName.toString.matches("[_.].*")))
+      .toMap
+    assert(dataFiles.size == 6, dataFiles)
+    assert(dataFiles.values.forall(_ == 1), dataFiles)
+
+    def digest(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy(col("collect_date").cast("string"), col("query_id"))
+        .agg(count(lit(1)), sum(col("value"))).collect().map(_.mkString("|")).sorted.toSeq
+    assert(digest(spark.read.parquet(path.toString)) ==
+      digest(input.withColumn("collect_date", to_date(col("collected_at")))))
   }
 }

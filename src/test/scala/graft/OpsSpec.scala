@@ -126,6 +126,20 @@ class ConfigStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException](store.delete("nope"))
   }
 
+  test("S7: loadEnabled keeps query_id order over a multi-file table in one job") {
+    val dir = Files.createTempDirectory("cfgstore3").toString + "/configs"
+    val enc = org.apache.spark.sql.Encoders.product[QueryConfig]
+    for (ids <- Seq(Seq("e", "b"), Seq("d", "a"), Seq("f", "c")))
+      spark.createDataset(ids.map(id => mkCfg(id, enabled = id != "c")))(enc)
+        .coalesce(1).write.mode("append").parquet(dir)
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 3)
+    val store = new ConfigStore(spark, dir)
+    val (rows, jobs) = org.apache.spark.graft.JobCounter(spark.sparkContext)(
+      store.loadEnabled().collect())
+    assert(rows.map(_.query_id).toSeq == Seq("a", "b", "d", "e", "f"))
+    assert(jobs == 1)
+  }
+
   test("W4: two-phase commit self-heals the rename crash window") {
     val dir = Files.createTempDirectory("cfgstore2").toString + "/configs"
     val store = new ConfigStore(spark, dir)

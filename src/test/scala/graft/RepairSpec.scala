@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ingest.EventsIngest
 import graft.repair.Repair
-import java.nio.file.Files
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.storage.StorageLevel
+import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
 /** J1-J5 + W7/W8: idempotent backfill over the partitioned fact table. */
@@ -23,7 +26,7 @@ class RepairSpec extends SparkSpec {
 
   private def d(s: String) = LocalDate.parse(s)
 
-  test("J1/J2/J4/J5/W8: anti-join plan, idempotent run, force overwrite") {
+  test("J1/J2/J4/J5/W8: partition-probe plan, idempotent run, force overwrite") {
     val path = Files.createTempDirectory("fact").toString + "/fact"
     Repair.configure(spark)
     // seed days 10-12
@@ -32,8 +35,7 @@ class RepairSpec extends SparkSpec {
       .write.partitionBy("collect_date", "query_id").mode("overwrite").parquet(path)
 
     val missing = Repair.missingDays(spark, path, "q1", d("2024-01-10"), d("2024-01-14"))
-      .collect().map(_.getDate(0).toString).sorted
-    assert(missing.toSeq == Seq("2024-01-13", "2024-01-14"))
+    assert(missing == Seq(d("2024-01-13"), d("2024-01-14")))
 
     // dry-run plan (J5)
     val plan = Repair.plan(spark, path, "q1", d("2024-01-10"), d("2024-01-14"), force = false)
@@ -65,6 +67,64 @@ class RepairSpec extends SparkSpec {
     val after = spark.read.parquet(path)
     assert(after.count() == 5)
     assert(after.select("value").distinct().head().getDouble(0) == 4.0)
+  }
+
+  private def plannedActions(path: String, queryId: String): Map[String, String] =
+    Repair.plan(spark, path, queryId, d("2024-01-10"), d("2024-01-13"), force = false)
+      .map(p => p.day.toString -> p.action).toMap
+
+  test("J1: a query id that needs path escaping probes its escaped directory") {
+    val path = Files.createTempDirectory("factesc").toString + "/fact"
+    val id = "gpu:daily/a=b"
+    EventsIngest.writeFactTable(
+      records(Seq(d("2024-01-10"), d("2024-01-12")), 1.0).withColumn("query_id", lit(id)),
+      path)
+    assert(spark.read.parquet(path).select("query_id").distinct().head().getString(0) == id)
+    assert(plannedActions(path, id) == Map("2024-01-10" -> "skip",
+      "2024-01-11" -> "recompute", "2024-01-12" -> "skip", "2024-01-13" -> "recompute"))
+  }
+
+  test("J1: a partition directory holding only hidden files counts as missing") {
+    val path = Files.createTempDirectory("facthid").toString + "/fact"
+    EventsIngest.writeFactTable(records(Seq(d("2024-01-10")), 1.0), path)
+    val hiddenOnly = Paths.get(path, "collect_date=2024-01-11", "query_id=q1")
+    Files.createDirectories(hiddenOnly)
+    Files.write(hiddenOnly.resolve("_SUCCESS"), Array.emptyByteArray)
+    Files.write(hiddenOnly.resolve(".part-0.parquet.crc"), Array[Byte](1, 2))
+    Files.createDirectories(Paths.get(path, "collect_date=2024-01-12", "query_id=q1"))
+    assert(plannedActions(path, "q1") == Map("2024-01-10" -> "skip",
+      "2024-01-11" -> "recompute", "2024-01-12" -> "recompute",
+      "2024-01-13" -> "recompute"))
+  }
+
+  test("J1: a sink that does not exist yet plans every day as recompute") {
+    val path = Files.createTempDirectory("factnone").toString + "/fact"
+    assert(plannedActions(path, "q1").values.toSet == Set("recompute"))
+    assert(Repair.plan(spark, path, "q1", d("2024-01-10"), d("2024-01-13"),
+      force = true).map(_.action).toSet == Set("recompute"))
+  }
+
+  test("J5: planning starts no Spark job") {
+    val path = Files.createTempDirectory("factjobs").toString + "/fact"
+    EventsIngest.writeFactTable(records((10 to 12).map(i => d(f"2024-01-$i%02d")), 1.0), path)
+    val (plan, jobs) = JobCounter(spark.sparkContext)(plannedActions(path, "q1"))
+    assert(plan("2024-01-10") == "skip" && plan("2024-01-13") == "recompute")
+    assert(jobs == 0)
+  }
+
+  test("J1: a run evaluates its records once and leaves nothing cached") {
+    val path = Files.createTempDirectory("factcache").toString + "/fact"
+    val evaluated = spark.sparkContext.longAccumulator("repair_rows")
+    val seen = udf { (v: Double) => evaluated.add(1); v }
+    val computed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val s = Repair.run(spark, path, "q1", d("2024-01-10"), d("2024-01-12"),
+      force = false, compute = days => {
+        val df = records(days, 2.0).filter(seen(col("value")) > 0); computed += df; df
+      })
+    assert(s.daysRepaired == 3 && s.recordsWritten == 3)
+    assert(spark.read.parquet(path).count() == 3)
+    assert(evaluated.value == 3) // the count filled the cache the write read
+    assert(computed.size == 1 && computed.head.storageLevel == StorageLevel.NONE)
   }
 
   test("J3: retention-error classification matches the reference strings") {
@@ -104,6 +164,19 @@ class RepairSpec extends SparkSpec {
     val left = spark.read.parquet(path)
       .select("collect_date").distinct().collect().map(_.get(0).toString).sorted
     assert(left.toSeq == Seq("2024-01-10", "2024-01-11", "2024-01-12"))
+  }
+
+  test("W7: retention delete resolves the fact path's own filesystem") {
+    val path = "file://" + Files.createTempDirectory("fact4").toString + "/fact"
+    EventsIngest.writeFactTable(records((8 to 10).map(i => d(f"2024-01-$i%02d")), 1.0), path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val defaultFs = conf.get("fs.defaultFS")
+    // a default FS nothing can serve: only the path's own scheme works
+    conf.set("fs.defaultFS", "graftnofs://nowhere/")
+    val deleted = try Repair.retentionDelete(spark, path, d("2024-01-10"))
+      finally conf.set("fs.defaultFS", defaultFs)
+    assert(deleted == 2)
+    assert(spark.read.parquet(path).count() == 1)
   }
 
   test("J8: CLI args — N days back from injected yesterday") {

@@ -115,6 +115,12 @@ sbt -batch test
 echo "== perfbench unit tests"
 python3 -m unittest discover -s perfbench -p 'test_*.py'
 
+# end-to-end check of the fact writer, repair and the stream sink: the
+# etl_collect run exits non-zero unless the sink matches what its
+# generator sent and re-running ops leaves the sink unchanged
+echo "== etl_collect smoke"
+python3 perfbench/run.py --workload etl_collect --seed 1 --seconds 4 --trace 0
+
 for sf in sf0.001 sf0.01 sf0.1; do
   echo "== verify $sf"
   out="/tmp/graft_gate_$sf"
