@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
 
 /** Benchmark main: times every registered query at the target scale
   * factor and prints one JSON line. Warmup is untimed and explicit — a
@@ -65,25 +67,29 @@ object Bench {
         (Map.empty[String, Double], Map.empty[String, Double], None)
     }
 
-  def main(args: Array[String]): Unit = {
+  /** Registered queries whose name matches one of `patterns`, in name
+    * order. A pattern is a name or a glob whose `*` matches any run of
+    * characters, in any position (`promql_parsed_*`, `*_stream`).
+    */
+  def select(patterns: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val globs = patterns.map(_.split("\\*", -1).map(java.util.regex.Pattern.quote).mkString(".*"))
+    SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => globs.exists(n.matches) }
+  }
+
+  /** The session and scale-factor directory Bench runs at, from
+    * SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS; graft.Trace shares them.
+    */
+  def sessionFromEnv(): (SparkSession, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
-    // I/O-placement evidence for the record: the streaming gates'
-    // state-store commits are fsync-bound, and build.sbt redirects
-    // java.io.tmpdir/spark.local.dir to tmpfs when available — print
-    // what THIS run actually inherited so a slow official number can be
-    // attributed (or not) to checkpoint placement.
-    System.err.println(s"BENCH TMPDIR java.io.tmpdir=${System.getProperty("java.io.tmpdir")} " +
-      s"spark.local.dir=${System.getProperty("spark.local.dir", "(unset)")}")
-    // SPARK_GRAFT_ONLY=name1,name2 (or a prefix ending in '*') restricts
-    // the run to a subset — an iteration aid for profiling one query's
-    // steady-state cost without paying the full 200-query pass. The
-    // official driver run sets no filter and times everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(sel => sel.contains(n) || sel.exists(p => p.endsWith("*") && n.startsWith(p.dropRight(1))))
-    }
+    (GraftSession.local(cpus), sfDir)
+  }
+
+  /** Bench's run path: the warm pass, the prepared count ACTION and the
+    * per-run CacheScope drain. graft.Trace drives queries through the
+    * same members, so a trace measures what Bench times.
+    */
+  final class Runner(spark: SparkSession, sfDir: String) {
     // The count-ACTION's plan goes through the statement cache too: for
     // a query whose builder served the session's prepared logical plan
     // (the instance is `eq` across calls — statement-cached builders
@@ -99,10 +105,13 @@ object Bench {
     // builders return a new frame per call
     // (the `eq` check fails) and keep paying their full build+plan cost,
     // which is the work their gates measure.
-    val countPlans = scala.collection.mutable.Map.empty[
-      String, (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]
-    def countAction(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    private val countPlans = scala.collection.mutable.Map.empty[
+      String, (LogicalPlan, LogicalPlan)]
+
+    /** Counts `df`'s rows through its prepared count plan; returns the
+      * executed QueryExecution.
+      */
+    def countAction(name: String, df: DataFrame): QueryExecution = {
       val logical = df.queryExecution.logical
       val prepared = countPlans.get(name) match {
         case Some((l, opt)) if l eq logical => opt
@@ -111,10 +120,15 @@ object Bench {
           countPlans(name) = (logical, opt)
           opt
       }
-      org.apache.spark.sql.graft.PlanShim.execute(spark, prepared).toRdd.count()
-      ()
+      val qe = org.apache.spark.sql.graft.PlanShim.execute(spark, prepared)
+      qe.toRdd.count()
+      qe
     }
-    ordered.foreach { case (name, fn) =>
+
+    /** One untimed warm run, then a drain: per-query frames never
+      * outlive warmup.
+      */
+    def warm(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
       try countAction(name, fn(spark, sfDir))
       catch {
         case scala.util.control.NonFatal(e) =>
@@ -123,8 +137,45 @@ object Bench {
           System.err.println(
             s"BENCH WARMUP FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
       }
-      graft.ext.CacheScope.drain() // per-query frames never outlive warmup
+      graft.ext.CacheScope.drain()
     }
+
+    /** One timed run: build, count, drain. Seconds, negative when the
+      * query threw; `onCount` sees the executed count plan.
+      */
+    def timedRun(name: String, fn: (SparkSession, String) => DataFrame,
+        onCount: QueryExecution => Unit = _ => ()): Double = {
+      val t0 = System.nanoTime()
+      val ok = try { onCount(countAction(name, fn(spark, sfDir))); true }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(
+            s"BENCH QUERY FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
+          false
+      }
+      val sec = (System.nanoTime() - t0) / 1e9
+      graft.ext.CacheScope.drain()
+      if (ok) sec else -sec
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (spark, sfDir) = sessionFromEnv()
+    // I/O-placement evidence for the record: the streaming gates'
+    // state-store commits are fsync-bound, and build.sbt redirects
+    // java.io.tmpdir/spark.local.dir to tmpfs when available — print
+    // what THIS run actually inherited so a slow official number can be
+    // attributed (or not) to checkpoint placement.
+    System.err.println(s"BENCH TMPDIR java.io.tmpdir=${System.getProperty("java.io.tmpdir")} " +
+      s"spark.local.dir=${System.getProperty("spark.local.dir", "(unset)")}")
+    // SPARK_GRAFT_ONLY=name1,name2 (or globs such as 'promql_parsed_*')
+    // restricts the run to a subset — an iteration aid for profiling one
+    // query's steady-state cost without paying the full 200-query pass.
+    // The official driver run sets no filter and times everything.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val ordered = only.fold(select(Seq("*")))(select)
+    val runner = new Runner(spark, sfDir)
+    ordered.foreach { case (name, fn) => runner.warm(name, fn) }
     // Two timed runs per query, report the min: single-run numbers at
     // this total runtime carry ±10% scheduler/GC noise, and the engine's
     // target metric is steady-state latency (plans and code are compiled
@@ -142,21 +193,8 @@ object Bench {
     // design — that is the engine's steady state, and they re-persist
     // through a storage-level guard so re-registration never
     // double-caches.
-    def timedRun(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { countAction(name, fn(spark, sfDir)); true }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"BENCH QUERY FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
-          false
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      graft.ext.CacheScope.drain()
-      if (ok) sec else -sec
-    }
-    val pass1 = ordered.map { case (name, fn) => name -> timedRun(name, fn) }.toMap
-    val pass2 = ordered.reverse.map { case (name, fn) => name -> timedRun(name, fn) }.toMap
+    val pass1 = ordered.map { case (name, fn) => name -> runner.timedRun(name, fn) }.toMap
+    val pass2 = ordered.reverse.map { case (name, fn) => name -> runner.timedRun(name, fn) }.toMap
     val results = ordered.map { case (name, fn) =>
       val two = Seq(pass1(name), pass2(name))
       // contention guard: two clean runs of the same compiled plan that
@@ -169,7 +207,7 @@ object Bench {
       while (runs.forall(_ > 0) && extra < 2 && runs.min > 0.15 && {
           val best = runs.sorted.take(2)
           best(1) > best(0) * 1.25
-        }) { runs = runs :+ timedRun(name, fn); extra += 1 }
+        }) { runs = runs :+ runner.timedRun(name, fn); extra += 1 }
       name -> (if (runs.exists(_ < 0)) -runs.map(math.abs).max
                else runs.min)
     }

@@ -757,11 +757,12 @@ object AnalyticsQueries {
         s.conf.set("spark.sql.shuffle.partitions", "1")
         // NIO atomic writes for the local checkpoints (round 18): the
         // Hadoop local create path costs ~33 ms/file without the native
-        // library vs ~0.1 ms raw NIO on the same tmpfs (CkptIoProbe),
-        // and every micro-batch commits several files (offset WAL,
-        // commit log, state deltas) — the dominant share of the gates'
-        // addBatch floor. Local-only; a real HDFS/S3 deployment keeps
-        // the stock manager by not setting this.
+        // library vs ~0.1 ms raw NIO on the same tmpfs
+        // (OPTIMIZATION_r18.md, Finding 2), and every micro-batch
+        // commits several files (offset WAL, commit log, state deltas)
+        // — the dominant share of the gates' addBatch floor. Local-only;
+        // a real HDFS/S3 deployment keeps the stock manager by not
+        // setting this.
         // GRAFT_CKPT_FM=default restores the stock manager for A/B.
         if (!sys.env.get("GRAFT_CKPT_FM").contains("default"))
           s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
@@ -785,20 +786,6 @@ object AnalyticsQueries {
         // native init outweighs its commit savings — HDFS-backed won on
         // every gate. Production-scale state is where RocksDB earns the
         // switch.
-        // diagnostics lever: per-micro-batch duration breakdown on
-        // stderr (GRAFT_STREAM_PROGRESS=1) — attributes gate cost to
-        // planning/state-commit/sink phases without a full profiler
-        if (sys.env.get("GRAFT_STREAM_PROGRESS").exists(_.nonEmpty))
-          s.streams.addListener(
-            new org.apache.spark.sql.streaming.StreamingQueryListener {
-              import org.apache.spark.sql.streaming.StreamingQueryListener._
-              override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-              override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-              override def onQueryProgress(e: QueryProgressEvent): Unit =
-                System.err.println(s"STREAMPROG batch=${e.progress.batchId} " +
-                  s"rows=${e.progress.numInputRows} " +
-                  s"durations=${e.progress.durationMs}")
-            })
         streamSessionMemo.put(spark, s)
       }
       s
@@ -861,7 +848,12 @@ object AnalyticsQueries {
       // for the life of the session (round-16 advice item). The parquet
       // path above keeps `work` — its output lives under it.
       deleteRecursively(new java.io.File(work))
-      ss.table(qn)
+      // The frame holds the resolved sink plan, not the name, so the
+      // view can go now: left registered, every gate call would keep
+      // its rows and a catalog entry for the life of the session.
+      val rows = ss.table(qn)
+      ss.catalog.dropTempView(qn)
+      rows
     }
   }
 

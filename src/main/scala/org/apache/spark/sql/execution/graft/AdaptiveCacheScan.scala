@@ -19,9 +19,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * never reuses one for the other (measured: a duplicated
   * aggregate-join over a `.persist()`ed frame executes BOTH copies with
   * AQE on, while plain `ReuseExchangeAndSubquery` dedupes the same plan
-  * with AQE off — ReuseProbe2). This engine serves every query from
-  * session-cached artifacts, so each repeated-selector PromQL
-  * expression re-paid its duplicate sub-plan in full.
+  * with AQE off — OPTIMIZATION_r18.md, Finding 1). This engine serves
+  * every query from session-cached artifacts, so each repeated-selector
+  * PromQL expression re-paid its duplicate sub-plan in full.
   *
   * [[GraftCachedScanExec]] is a thin delegating leaf with a correct
   * `doCanonicalize`. Wrapping the scan BEFORE stage creation (the

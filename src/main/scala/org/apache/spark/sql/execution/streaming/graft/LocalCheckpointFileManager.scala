@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * Why: without the native hadoop library (this harness has none), the
   * Hadoop local create path costs ~33 ms PER FILE on tmpfs where the
   * identical NIO write+atomic-move costs ~0.1 ms (measured,
-  * graft.CkptIoProbe op01..20 vs nio1..5) — and a micro-batch commits
+  * OPTIMIZATION_r18.md, Finding 2) — and a micro-batch commits
   * several such files (offset WAL, commit log, one state-store delta
   * per store). Across the thirteen stream≡batch gates that fixed tax
   * was the dominant share of the measured addBatch floor. Reads,

@@ -134,7 +134,7 @@ class ConfigStoreSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(dir)
     assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 3)
     val store = new ConfigStore(spark, dir)
-    val (rows, jobs) = org.apache.spark.graft.JobCounter(spark.sparkContext)(
+    val (rows, jobs) = org.apache.spark.graft.RunCounter.jobs(spark.sparkContext)(
       store.loadEnabled().collect())
     assert(rows.map(_.query_id).toSeq == Seq("a", "b", "d", "e", "f"))
     assert(jobs == 1)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ingest.EventsIngest
 import graft.repair.Repair
-import org.apache.spark.graft.JobCounter
+import org.apache.spark.graft.RunCounter
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
@@ -107,7 +107,7 @@ class RepairSpec extends SparkSpec {
   test("J5: planning starts no Spark job") {
     val path = Files.createTempDirectory("factjobs").toString + "/fact"
     EventsIngest.writeFactTable(records((10 to 12).map(i => d(f"2024-01-$i%02d")), 1.0), path)
-    val (plan, jobs) = JobCounter(spark.sparkContext)(plannedActions(path, "q1"))
+    val (plan, jobs) = RunCounter.jobs(spark.sparkContext)(plannedActions(path, "q1"))
     assert(plan("2024-01-10") == "skip" && plan("2024-01-13") == "recompute")
     assert(jobs == 0)
   }
