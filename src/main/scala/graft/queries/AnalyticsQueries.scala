@@ -691,16 +691,6 @@ object AnalyticsQueries {
   private val streamSessionMemo =
     new java.util.WeakHashMap[SparkSession, SparkSession]
 
-  /** The streaming harnesses' INPUT fixtures (events/metrics + flush
-    * sentinels written as one parquet file) are pure functions of
-    * (session, sfDir) — write each once and reuse the path across calls.
-    * The stream itself (checkpoint, sink, state stores) stays fresh per
-    * call; only the batch-side prep is memoized.
-    */
-  private val streamInputMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, String]]
-
   /** Append `df` to `path` as one parquet file and bump the new file's
     * mtime by `mtimeBump` ms — the file source schedules micro-batches
     * in modification-time order, so distinct bumps fix batch order
@@ -718,24 +708,19 @@ object AnalyticsQueries {
       .foreach(f => f.setLastModified(f.lastModified + mtimeBump))
   }
 
+  /** The streaming harnesses' INPUT fixtures (events/metrics + flush
+    * sentinels written as one parquet file) are pure functions of
+    * (session, sfDir) — write each once and reuse the path across calls.
+    * The stream itself (checkpoint, sink, state stores) stays fresh per
+    * call; only the batch-side prep is memoized.
+    */
   private def cachedStreamInput(spark: SparkSession, key: String)(
-      write: String => Unit): String = {
-    val perSession = streamInputMemo.synchronized {
-      var m = streamInputMemo.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        streamInputMemo.put(spark, m)
-      }
-      m
+      write: String => Unit): String =
+    graft.sources.TableCache.memoValue(spark, s"streamInput#$key") {
+      val dir = java.nio.file.Files.createTempDirectory("stream_in").toString
+      write(s"$dir/in")
+      s"$dir/in"
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(key, {
-        val dir = java.nio.file.Files.createTempDirectory("stream_in").toString
-        write(s"$dir/in")
-        s"$dir/in"
-      })
-    }
-  }
 
   private def withStreamSession[A](spark: SparkSession)(f: SparkSession => A): A = {
     // ONE dedicated child session per parent, reused across streaming

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped frame memo — the engine's buffer pool. Hot base
+/** Session-scoped artifact memo — the engine's buffer pool. Hot base
   * frames (the ingested fact frame, the documents/embeddings corpus)
   * are read by every registered query; materializing the scan (plus the
   * one-time parallelism-floor shuffle, see [[graft.ext.Parallelism]])
@@ -12,16 +12,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frames; [[graft.ext.CacheScope.drain]] deliberately does NOT touch
   * these — they are the documented steady state.
   *
+  * One store: per session, a map from key to an at-most-once [[Cell]].
+  * Frames ([[memo]]), driver-side values ([[memoValue]]) and the
+  * statement cache's optimized plans ([[planCachedPack]]) all live in
+  * it, so frame, value and plan keys share one key space. Session
+  * artifacts — vocabularies, indexes, codebooks, trained centroids —
+  * go through [[persisted]], which owns the ONE re-persist guard: a
+  * frame unpersisted externally (`spark.catalog.clearCache()`) is
+  * re-persisted on its next access. A helper whose build reads another
+  * persisted artifact binds that parent BEFORE its own `persisted`
+  * call: Spark substitutes cached fragments into a plan when it is
+  * persisted, so a re-persist with the parent still evicted would embed
+  * (and compute a second time) the parent's whole lineage.
+  *
   * Keying discipline (inherited from the original fact-frame memo): the
   * outer map keys on the session by exact IDENTITY — an identity hash
   * can be reused after GC and hand a new session a frame bound to a
   * stopped context. Weak keying alone cannot collect an entry here (the
   * cached DataFrames strongly reference their session — the classic
   * value→key cycle), so entries are ALSO removed explicitly by ONE
-  * application-end listener per SparkContext that clears the maps
-  * without capturing any session (see [[registerCleanup]]). A frame that
-  * was unpersisted externally (e.g. `spark.catalog.clearCache()`) is
-  * re-persisted and re-counted on next access.
+  * application-end listener per SparkContext that clears the map
+  * without capturing any session (see [[registerCleanup]]).
   */
 object TableCache {
   /** At-most-once cell: created (cheaply, empty) under the session
@@ -33,9 +44,9 @@ object TableCache {
     * re-run the first caller's closure forever and retain it for the
     * session's lifetime).
     */
-  private final class Holder {
-    private var v: DataFrame = null
-    def value(build: => DataFrame): DataFrame = synchronized {
+  private final class Cell {
+    private var v: AnyRef = null
+    def value(build: => AnyRef): AnyRef = synchronized {
       if (v == null) {
         val built = build
         // null sentinel doubles as the "not yet built" marker, so a
@@ -48,78 +59,69 @@ object TableCache {
     }
   }
 
-  /** [[Holder]] for non-frame session artifacts (a collected bloom
-    * filter's bytes, a codebook) — same at-most-once semantics.
-    */
-  private final class ValueHolder {
-    private var v: AnyRef = null
-    def value(build: => AnyRef): AnyRef = synchronized {
-      if (v == null) {
-        val built = build
-        require(built != null, "TableCache value builder returned null")
-        v = built
-      }
-      v
-    }
-  }
-
   private val sessions =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Holder]]()
-  private val values =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, ValueHolder]]()
-  private val plans =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[
-      String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]()
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Cell]]()
 
-  /** The memoized frame for `key`, built on first access (at most once
-    * per (session, key)) — memoization only, no persistence. The
-    * session-wide lock covers only holder creation; the builder itself
-    * runs under the holder's own per-key monitor, so one family's slow
-    * first build (a driver-side collect, a multi-stage fixture
-    * materialization) never blocks another family's warm lookup. A
-    * builder that calls memo() recursively for a DIFFERENT key is safe
-    * for the same reason (the map lock is released before forcing).
+  /** The cell for (session, key). The session-wide locks cover only
+    * map and cell creation; the builder itself runs under the cell's
+    * own monitor, so one family's slow first build (a driver-side
+    * collect, a multi-stage fixture materialization) never blocks
+    * another key's lookup, and a builder that memoizes a DIFFERENT key
+    * recursively is safe for the same reason.
     */
-  def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val perSession = sessionMap(spark)
-    val holder = perSession.synchronized {
-      perSession.getOrElseUpdate(key, new Holder)
-    }
-    holder.value(build)
-  }
-
-  /** A memoized non-frame session artifact (collected driver-side
-    * values: a bloom filter's bytes, a codebook) — the value analogue
-    * of [[memo]], same per-key locking and cleanup lifecycle. Unlike a
-    * persisted frame, the value cannot be evicted by a cache clear; it
-    * lives until application end.
-    */
-  def memoValue[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T = {
+  private def cell(spark: SparkSession, key: String): Cell = {
     registerCleanup(spark)
-    val perSession = values.synchronized {
-      var m = values.get(spark)
+    val perSession = sessions.synchronized {
+      var m = sessions.get(spark)
       if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, ValueHolder]
-        values.put(spark, m)
+        m = scala.collection.mutable.Map.empty[String, Cell]
+        sessions.put(spark, m)
       }
       m
     }
-    val holder = perSession.synchronized {
-      perSession.getOrElseUpdate(key, new ValueHolder)
-    }
-    holder.value(build).asInstanceOf[T]
+    perSession.synchronized(perSession.getOrElseUpdate(key, new Cell))
   }
 
-  /** The memoized frame for `key`, building (and persisting) on first
-    * access. `build` runs at most once per (session, key).
+  /** A memoized session value for `key` (a collected bloom filter's
+    * bytes, a codebook, a written fixture path), built at most once per
+    * (session, key). Unlike a persisted frame, a value cannot be
+    * evicted by a cache clear; it lives until application end.
+    */
+  def memoValue[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T =
+    cell(spark, key).value(build).asInstanceOf[T]
+
+  /** The memoized frame for `key` — memoization only, no persistence. */
+  def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    memoValue(spark, key)(build)
+
+  /** A session artifact: the memoized frame for `key`, persisted
+    * whenever its storage level is NONE — on first build and again
+    * after an external cache clear evicted it. Bind any persisted
+    * parent the build reads BEFORE this call (see the object doc).
+    */
+  def persisted(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    guarded(spark, key)(build)._1
+
+  /** [[persisted]] plus one eager fill whenever this call (re)persisted
+    * the frame, so concurrent consumers never race an empty cache: for
+    * base frames many queries read (the fact frame, whose fill
+    * perfbench times as `setup_s`).
     */
   def getOrBuild(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val df = memo(spark, key)(build)
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // fill before concurrent consumers race the cache
-    }
+    val (df, fresh) = guarded(spark, key)(build)
+    if (fresh) df.count()
     df
+  }
+
+  /** The re-persist guard — the only one in the engine. Returns the
+    * frame and whether this call persisted it.
+    */
+  private def guarded(spark: SparkSession, key: String)(
+      build: => DataFrame): (DataFrame, Boolean) = {
+    val df = memo(spark, key)(build)
+    val evicted = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (evicted) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (df, evicted)
   }
 
   // (A round-18 `getOrCheckpoint` RDD-leaf sibling lived here briefly —
@@ -127,18 +129,6 @@ object TableCache {
   // columnar cache's batch-stat and column pruning; superseded by the
   // GraftWrapCachedScans query-stage-prep rule, which fixes the reuse
   // on this persisted form directly. See OPTIMIZATION_r18.md finding 1.)
-
-  private def sessionMap(spark: SparkSession): scala.collection.mutable.Map[String, Holder] = {
-    registerCleanup(spark)
-    sessions.synchronized {
-      var m = sessions.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, Holder]
-        sessions.put(spark, m)
-      }
-      m
-    }
-  }
 
   /** One listener per CONTEXT that has already registered. Weak keys:
     * a stopped, collected context must not pin this guard map either.
@@ -148,10 +138,10 @@ object TableCache {
 
   /** Registers the application-end cleanup exactly once per
     * SparkContext. The listener captures NO session (a strongly
-    * captured session key would defeat the WeakHashMaps for the
+    * captured session key would defeat the WeakHashMap for the
     * application's lifetime) and is context-scoped, so derived
     * sessions (`spark.newSession()`) don't stack additional listeners
-    * on the shared context. Clearing both maps wholesale at
+    * on the shared context. Clearing the map wholesale at
     * application end is sound because Spark permits one active context
     * at a time: every live entry belongs to a session of the context
     * that just ended, and entries of previously stopped contexts were
@@ -167,8 +157,6 @@ object TableCache {
             override def onApplicationEnd(
                 end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
               sessions.synchronized { sessions.clear() }
-              values.synchronized { values.clear() }
-              plans.synchronized { plans.clear() }
             }
           })
       }
@@ -203,28 +191,11 @@ object TableCache {
       case (name, entry) if except(name) => name -> entry
       case (name, (fn, sql)) =>
         name -> (((spark: SparkSession, sfDir: String) => {
-          val m = planMap(spark)
-          val opt = m.synchronized {
-            m.getOrElseUpdate(s"plan#$name#$sfDir",
-              org.apache.spark.sql.graft.PlanShim.optimizedPlan(fn(spark, sfDir)))
-          }
+          val opt = memoValue(spark, s"plan#$name#$sfDir")(
+            org.apache.spark.sql.graft.PlanShim.optimizedPlan(fn(spark, sfDir)))
           org.apache.spark.sql.graft.PlanShim.ofRows(spark, opt)
         }, sql))
     }
-
-  private def planMap(spark: SparkSession): scala.collection.mutable.Map[
-      String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
-    registerCleanup(spark)
-    plans.synchronized {
-      var m = plans.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[
-          String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-        plans.put(spark, m)
-      }
-      m
-    }
-  }
 
   /** A parquet table widened to the parallelism floor, MEMOIZED but not
     * persisted: the standard read path for corpus tables. The memo

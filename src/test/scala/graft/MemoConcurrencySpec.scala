@@ -2,17 +2,17 @@ package graft
 
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.TableCache
 
-/** Contract of TableCache.memo's per-key holders (round 12): the
+/** Contract of TableCache's per-key cells (round 12): the
   * builder runs AT MOST ONCE per (session, key) under a thread race, a
   * slow build of one key never blocks a different key's lookup (the
-  * session-wide map lock covers holder creation only — the property the
+  * session-wide map lock covers cell creation only — the property the
   * round-12 review fix exists for; under the old build-under-map-lock
   * scheme the cross-key test below deadlocks its 10 s timeout), and a
   * failed build leaves the cell empty so the next caller retries WITH
-  * ITS OWN thunk (the holder stores no builder — pinning the first
+  * ITS OWN thunk (the cell stores no builder — pinning the first
   * caller's closure would re-run a broken build forever and retain the
   * closure for the session's lifetime).
   */
@@ -73,6 +73,40 @@ class MemoConcurrencySpec extends SparkSpec {
       // on ANY failure path: unpark the slow builder and interrupt the
       // pool, so a reintroduced map-wide lock reports as a test failure
       // rather than a hung non-daemon thread wedging the JVM
+      release.countDown()
+      pool.shutdownNow()
+      ()
+    }
+  }
+
+  test("a slow statement-cache build does not block another query's plan") {
+    // planCachedPack keeps its optimized plans in the same per-key cells:
+    // one query's slow first build (a builder that collects, a deep
+    // plan's optimization) must not hold a lock another query needs
+    val slowEntered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val slowName = "memoSpec_slow_" + System.nanoTime()
+    val fastName = "memoSpec_fast_" + System.nanoTime()
+    val pack = TableCache.planCachedPack(Map(
+      slowName -> (((s: SparkSession, _: String) => {
+        slowEntered.countDown()
+        release.await()
+        s.range(1).toDF("x")
+      }, "")),
+      fastName -> (((s: SparkSession, _: String) => s.range(2).toDF("x"), ""))))
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val slow = pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = pack(slowName)._1(spark, "sf")
+      })
+      assert(slowEntered.await(10, TimeUnit.SECONDS))
+      val fast = pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = pack(fastName)._1(spark, "sf")
+      })
+      assert(fast.get(10, TimeUnit.SECONDS).count() == 2)
+      release.countDown()
+      slow.get(10, TimeUnit.SECONDS)
+    } finally {
       release.countDown()
       pool.shutdownNow()
       ()

@@ -317,8 +317,8 @@ class PlanShapeSpec extends SparkSpec {
     // and falsely pass. Clear the shared cache and build cells ONLY —
     // the helper itself must persist the centroids first for the scan
     // to appear; every other fixture re-persists on its next access
-    // via its storage-level guard (the same recovery Bench's warmup
-    // clearCache exercises).
+    // via TableCache's storage-level guard (the same recovery
+    // ScaleProbe's and the specs' clearCache calls exercise).
     spark.catalog.clearCache()
     val cells = graft.queries.ExtQueries.cachedKmeansCells(spark, sf)
     val imr = cells.queryExecution.withCachedData.collectFirst {
@@ -328,7 +328,57 @@ class PlanShapeSpec extends SparkSpec {
     val inner = imr.get.cachedPlan.toString
     assert(inner.contains("InMemoryTableScan"),
       s"cells' cached plan does not read the centroid relation:\n${inner.take(1200)}")
+
+    // the same parents-first rule for every derived session artifact:
+    // build the child, clear the cache, call ONLY the child — its
+    // re-persisted plan must scan the parent's (re-persisted) relation,
+    // not embed a second copy of the parent's lineage
+    val x = graft.queries.ExtQueries
+    val derived = Seq[(String, () => DataFrame, () => DataFrame)](
+      ("capped8 -> tagged8",
+        () => x.cachedCapped8(spark, sf), () => x.cachedTagged8(spark, sf)),
+      ("cellAssign -> centroids",
+        () => x.cachedCellAssign(spark, sf), () => x.cachedCentroids(spark, sf)),
+      ("minhashSigs -> shingle(lang)",
+        () => x.cachedMinhashSigs(spark, sf), () => x.cachedShingleFrame(spark, sf, "lang")),
+      ("lshCandidates -> minhashSigs",
+        () => x.cachedLshCandidates(spark, sf), () => x.cachedMinhashSigs(spark, sf)),
+      ("simhashPairs -> repSimhash32",
+        () => x.cachedSimhashPairs(spark, sf), () => x.cachedRepSimhash32(spark, sf)),
+      ("dedupComponents -> docRoots",
+        () => x.cachedDedupComponents(spark, sf), () => x.cachedDocRoots(spark, sf)))
+    for ((name, child, parent) <- derived) {
+      child()
+      spark.catalog.clearCache()
+      val childRel = cachedRelation(child())
+      val parentRel = cachedRelation(parent())
+      assert(memoryScans(childRel.cachedPlan).exists(_.relation.cacheBuilder eq parentRel.cacheBuilder),
+        s"$name: the child's cached plan does not read the parent's relation:\n" +
+          childRel.cachedPlan.toString.take(1200))
+    }
   }
+
+  /** The relation CacheManager holds for `df` NOW, looked up through a
+    * fresh Dataset (a memoized frame's own QueryExecution may carry a
+    * relation from before a cache clear).
+    */
+  private def cachedRelation(df: DataFrame)
+      : org.apache.spark.sql.execution.columnar.InMemoryRelation = {
+    val fresh = org.apache.spark.sql.graft.PlanShim.ofRows(spark, df.queryExecution.analyzed)
+    fresh.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.getOrElse(fail(s"frame is not cached:\n${df.queryExecution.analyzed.toString.take(600)}"))
+  }
+
+  /** Every in-memory scan in a physical plan, looking through AQE. */
+  private def memoryScans(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec] =
+    plan.flatMap {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        memoryScans(a.inputPlan)
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => Seq(s)
+      case _ => Nil
+    }
 
   test("range_join buckets the interval predicate into an equi-join, never BNLJ") {
     val plan = finalPlan(SparkEntry.queries("range_join")(spark, sf))

@@ -20,11 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`CacheScope`, `.collect()`, `.write`, `writeStream`,
   * `createTempDirectory`, `.persist(`, `.unpersist(`,
   * `localCheckpoint`). The walk does NOT descend into audited PURE
-  * BOUNDARIES — the session-memo helpers whose bodies persist but
-  * re-persist on eviction (the `storageLevel == NONE → persist()`
-  * guard), and `TableCache` itself — because their consumers stay
-  * cacheable by construction; each claimed boundary is structurally
-  * re-verified here, not taken on faith.
+  * BOUNDARIES — the session-memo helpers whose build goes through
+  * `TableCache.persisted`/`getOrBuild` (which re-persist on eviction)
+  * or `memoValue` (never evicted), and `TableCache` itself — because
+  * their consumers stay cacheable by construction; each claimed
+  * boundary is structurally re-verified here, not taken on faith.
   *
   * This is a source-level over-approximation on purpose: a false
   * positive (marker text reached through a helper that is genuinely
@@ -69,11 +69,13 @@ class StatementCachePuritySpec extends AnyFunSuite {
     * unrelated same-named member in another object (PromClient also
     * has a `metricNames`) from polluting a builder's reachability.
     */
-  private lazy val members: Map[(String, String), String] = {
+  private lazy val members: Map[(String, String), String] = membersOf(files)
+
+  private def membersOf(fs: Seq[(String, String)]): Map[(String, String), String] = {
     val defRe = """\n  (?:private(?:\[\w+\])? )?(?:lazy val|def|val) (\w+)""".r
     val objRe = """(?:^|\n)(?:private )?(?:object|class|trait) (\w+)""".r
     val acc = scala.collection.mutable.Map.empty[(String, String), String]
-    files.foreach { case (_, raw) =>
+    fs.foreach { case (_, raw) =>
       val s = stripped(raw)
       val objs = objRe.findAllMatchIn(s).map(m => m.start -> m.group(1)).toSeq
       def objAt(pos: Int): String =
@@ -139,9 +141,11 @@ class StatementCachePuritySpec extends AnyFunSuite {
     markerRe.findAllIn(body).toSeq.distinct
 
   /** Session-memo guard helpers: builders that memoize a frame per
-    * (session, dataset) and RE-PERSIST IT IF EVICTED (the
-    * `storageLevel == NONE → persist()` guard), or TableCache's own
-    * members which carry the same guard. Their one-time build cost
+    * (session, dataset) through `TableCache.persisted`/`getOrBuild`,
+    * which RE-PERSIST IT IF EVICTED (the one `storageLevel == NONE →
+    * persist()` guard, inside TableCache), or a value through
+    * `memoValue`, or TableCache's own entry points. Their one-time
+    * build cost
     * (persist, an eager count, even a driver-side collect of a
     * codebook-sized value) is session state, not per-query work, so
     * those markers do NOT propagate to consumers. With ONE exception,
@@ -157,12 +161,26 @@ class StatementCachePuritySpec extends AnyFunSuite {
   // rebuild a Map and silently drop same-object helpers)
   private lazy val guardHelpers: Set[(String, String)] = members.toSeq.collect {
     case (key, body)
-        if body.contains("StorageLevel.NONE") && body.contains(".persist(") &&
+        if guardCallRe.findFirstIn(body).nonEmpty &&
           !body.contains("CacheScope") && !body.contains("writeStream") &&
           !body.contains("createTempDirectory") =>
       key
-  }.toSet ++ Seq("memo", "getOrBuild", "widenedParquet", "planCachedPack")
-    .map("TableCache" -> _)
+  }.toSet ++ tableCacheBoundaries
+
+  /** A call to one of TableCache's session-memo entry points: the two
+    * re-persisting frame memos, and `memoValue`, whose driver-side
+    * value (a codebook, a vocabulary size) is built once per session
+    * and cannot be evicted at all.
+    */
+  private val guardCallRe = """\bTableCache\.(?:persisted|getOrBuild|memoValue)\s*\(""".r
+
+  private val tableCacheBoundaries =
+    Set("memo", "persisted", "getOrBuild", "widenedParquet", "planCachedPack")
+      .map("TableCache" -> _)
+
+  /** A member carrying its own re-persist guard. */
+  private def ownGuard(body: String): Boolean =
+    body.contains("StorageLevel.NONE") && body.contains(".persist(")
 
   /** Member names excluded from call-name resolution because they
     * collide with ubiquitous stdlib methods (`Map.get`, `Option.get`):
@@ -278,20 +296,40 @@ class StatementCachePuritySpec extends AnyFunSuite {
 
   test("guard helpers carry the re-persist guard and no stream/tempdir use") {
     // structural re-verification of the guard-helper set itself:
-    // everything classified as one either lives in TableCache or has
-    // the storageLevel==NONE re-persist guard, and none of them touch
+    // everything classified as one either is a TableCache entry point
+    // or calls persisted/getOrBuild/memoValue, and none of them touch
     // CacheScope, streams, or temp dirs in their own body
-    val tableCacheMembers = Set("memo", "getOrBuild", "widenedParquet", "planCachedPack")
-      .map("TableCache" -> _)
-    (guardHelpers -- tableCacheMembers).foreach { b =>
+    (guardHelpers -- tableCacheBoundaries).foreach { b =>
       val body = members(b)
-      assert(body.contains("StorageLevel.NONE") && body.contains(".persist("),
-        s"guard helper $b lost its re-persist guard")
+      assert(guardCallRe.findFirstIn(body).nonEmpty,
+        s"guard helper $b no longer calls TableCache.persisted/getOrBuild/memoValue")
       assert(!body.contains("CacheScope") && !body.contains("writeStream"),
         s"guard helper $b is not a session-memo boundary")
     }
+    // the guard itself: persisted and getOrBuild both route through the
+    // one TableCache member that re-persists a frame whose storage
+    // level is NONE
+    val guards = members.toSeq.collect {
+      case (key @ ("TableCache", _), body) if ownGuard(body) => key
+    }
+    assert(guards.size == 1, s"expected exactly one re-persist guard in TableCache: $guards")
+    val guardCall = s"""\\b${guards.head._2}\\s*\\(""".r
+    Seq("persisted", "getOrBuild").foreach { m =>
+      assert(guardCall.findFirstIn(members("TableCache" -> m)).nonEmpty,
+        s"TableCache.$m does not go through the re-persist guard ${guards.head._2}")
+    }
     // and the set is non-trivial — the session-memo roster exists
     assert(guardHelpers.size > 10, s"suspiciously few guard helpers: $guardHelpers")
+  }
+
+  test("no query member carries its own re-persist guard") {
+    // the guard lives only in TableCache: a hand-copied
+    // `storageLevel == NONE → persist()` in a query pack is a second,
+    // drifting implementation of the session-artifact rule
+    val own = membersOf(files.filter(_._1.contains("/queries/")))
+      .collect { case (key, body) if ownGuard(body) => s"${key._1}.${key._2}" }
+    assert(own.isEmpty,
+      s"re-persist guards outside TableCache (use TableCache.persisted): ${own.toSeq.sorted}")
   }
 
   test("every transitively impure builder is statement-cache exempt") {

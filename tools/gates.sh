@@ -121,6 +121,13 @@ python3 -m unittest discover -s perfbench -p 'test_*.py'
 echo "== etl_collect smoke"
 python3 perfbench/run.py --workload etl_collect --seed 1 --seconds 4 --trace 0
 
+# end-to-end check of the read path: the promql_dashboard run exits
+# non-zero unless every checked panel matches promref.py's independent
+# evaluation; its setup fills the fact frame through
+# TableCache.getOrBuild
+echo "== promql_dashboard smoke"
+python3 perfbench/run.py --workload promql_dashboard --seed 1 --seconds 4 --trace 0
+
 for sf in sf0.001 sf0.01 sf0.1; do
   echo "== verify $sf"
   out="/tmp/graft_gate_$sf"
