@@ -159,6 +159,17 @@ object Bench {
     }
   }
 
+  /** Where the full per-query record goes: `BENCH_FULL.json` — the
+    * committed sf0.1 record the ledger tools read — only for an sf0.1
+    * run; any other scale factor writes `BENCH_FULL.<sf>.json` (ignored
+    * by git), so a smoke run cannot overwrite the committed record.
+    */
+  def fullRecordFile(sfDir: String): String =
+    java.nio.file.Paths.get(sfDir).getFileName.toString match {
+      case "sf0.1" => "BENCH_FULL.json"
+      case sf => s"BENCH_FULL.$sf.json"
+    }
+
   def main(args: Array[String]): Unit = {
     val (spark, sfDir) = sessionFromEnv()
     // I/O-placement evidence for the record: the streaming gates'
@@ -265,7 +276,7 @@ object Bench {
     // stdout (plus sbt's trailing "[success] Total time" line). A single
     // JSON line naming all ~120 queries is ~3.5 kB — its head gets clipped
     // and the line no longer parses (rounds 1–5 all recorded parsed:null).
-    // So: the full per-query map goes to BENCH_FULL.json on disk, and the
+    // So: the full per-query map goes to disk ([[fullRecordFile]]), and the
     // printed line carries the headline total plus as many slowest-first
     // query entries as fit a conservative char budget.
     // the official-vs-standalone inflation factor, recorded per run
@@ -310,14 +321,14 @@ object Bench {
       .mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size}$ratioJson$calibJson,"queries":$fullQs,"failed":$failedJson,"sf":"$sfDir"}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_FULL.json"),
+    val fullFile = fullRecordFile(sfDir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(fullFile),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // The printed line must survive the harness's ~2000-char stdout tail AND
     // parse as JSON: keep it well under 1 kB, make it the LAST thing on
     // stdout (after spark.stop(), whose shutdown chatter goes to stderr),
     // and carry only the top-slowest queries inline — the full map lives in
-    // BENCH_FULL.json. The budget loop breaks at the first entry that does
+    // `fullFile`. The budget loop breaks at the first entry that does
     // not fit so the inline map is a strict slowest-first prefix.
     val budget = 400
     val inline = new StringBuilder
@@ -328,7 +339,7 @@ object Bench {
       if (!full && inline.length + entry.length <= budget) inline.append(entry)
       else { full = true; omitted += 1 }
     }
-    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size}$ratioJson$calibJson,"queries":{${inline.result()}},"queries_omitted":$omitted,"full":"BENCH_FULL.json","failed":$failedJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size}$ratioJson$calibJson,"queries":{${inline.result()}},"queries_omitted":$omitted,"full":"$fullFile","failed":$failedJson,"sf":"$sfDir"}"""
     spark.stop()
     System.out.println(line)
     System.out.flush()

@@ -5,8 +5,13 @@ import org.apache.spark.sql.functions._
 import PromParser._
 
 /** Evaluator: compiles a parsed PromQL expression (the reference's shipped
-  * surface) into the [[PromOps]] DataFrame pipeline. Instant evaluation
-  * returns one row per output series: (skey, value).
+  * surface) into the [[PromOps]] DataFrame pipeline. There is one
+  * evaluator, [[evalGrid]]: an expression evaluates at every aligned
+  * point g of a step grid, one row per (output series, point):
+  * (skey, g, value). An instant query is the one-point grid [t, t] —
+  * Prometheus's own engine runs it as a range evaluation with
+  * start = end — so [[evalInstant]] only drops `g`, and every operator's
+  * per-point kernel exists once, keyed by (series, g).
   *
   * Subquery evaluation reuses the sample→grid-point expansion, so the
   * flagship's `[24h:1m]` grid stays linear in sample count end-to-end —
@@ -40,12 +45,12 @@ object PromEval {
 
   /** Prometheus's `@ start()` / `@ end()` preprocessing: resolve every
     * edge-pinned selector to a literal `@` timestamp given the QUERY's
-    * evaluation bounds. Runs once at each public entry point — instant
-    * evaluation passes start = end = the eval time, grid evaluation its
-    * range bounds — so selectors inside subqueries pin to the outer
-    * query's bounds, never to the subquery's derived grid (which is how
-    * Prometheus itself scopes the modifier). Idempotent: a resolved
-    * tree has no `atEdge` left and recursion rewrites nothing.
+    * evaluation bounds. Runs once, in [[evalGrid]], with the range's
+    * bounds — an instant query's are start = end = the eval time — so
+    * selectors inside subqueries pin to the outer query's bounds, never
+    * to the subquery's derived grid (which is how Prometheus itself
+    * scopes the modifier). Idempotent: a resolved tree has no `atEdge`
+    * left and recursion rewrites nothing.
     */
   def resolveAtEdges(expr: Expr, startSec: Long, endSec: Long): Expr =
     mapSelectors(expr)(
@@ -70,299 +75,14 @@ object PromEval {
     case _ => false
   }
 
-  /** Evaluate `expr` as an instant query at `atEpochSec`. */
-  def evalInstant(metrics: DataFrame, expr0: Expr, atEpochSec: Long,
-      lookbackSec: Long = PromOps.DefaultLookbackSec): DataFrame = {
-    // instant query: start() = end() = the evaluation time
-    val expr =
-      if (hasAtEdge(expr0)) resolveAtEdges(expr0, atEpochSec, atEpochSec)
-      else expr0
-    evalInstantResolved(metrics, expr, atEpochSec, lookbackSec)
-  }
-
-  private def evalInstantResolved(metrics: DataFrame, expr: Expr,
-      atEpochSec: Long, lookbackSec: Long): DataFrame = expr match {
-    case TimeShift(inner, off, at, _) =>
-      // subquery offset/@: rebase the subtree's evaluation instant —
-      // `@` replaces it, offset then applies relative to it
-      evalInstant(metrics, inner, at.getOrElse(atEpochSec) - off, lookbackSec)
-    case s: Selector =>
-      applyMatchers(
-        PromOps.instantVector(matcherFilter(metrics, s), s.name,
-          s.evalAt(atEpochSec), lookbackSec))
-    case BoolCmp(inner, op, v) =>
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .withColumn("value", PromOps.boolCmp(col("value"), op, v))
-    case FilterCmp(inner, op, v) =>
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .filter(PromOps.boolCmp(col("value"), op, v) === 1.0)
-    case Arith(inner, op, v) =>
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .withColumn("value", arith(col("value"), op, v))
-    case Agg(fn, inner, by, without) =>
-      regroup(evalInstant(metrics, inner, atEpochSec, lookbackSec), fn, by, without, Nil)
-    case OverTime(fn, sel, w) =>
-      val rs = PromOps.rangeSelector(matcherFilter(metrics, sel), sel.name,
-        sel.evalAt(atEpochSec), w)
-      rs.groupBy(col("skey")).agg(overTimeAgg(fn, col("e")).as("value"))
-    case Rate(kind, sel, w) if kind == "resets" || kind == "changes" =>
-      PromOps.resetsOverRange(matcherFilter(metrics, sel), sel.name,
-        sel.evalAt(atEpochSec), w, kind)
-    case Rate(kind, sel, w) =>
-      PromOps.rateOverRange(matcherFilter(metrics, sel), sel.name,
-        sel.evalAt(atEpochSec), w, kind)
-    case OverTimeSubquery(fn, inner, w, step) =>
-      val g0 = ((atEpochSec - w) / step + 1) * step // first aligned point > t-w
-      val g1 = (atEpochSec / step) * step
-      evalGrid(metrics, inner, g0, g1, step, lookbackSec)
-        .groupBy(col("skey")).agg(overTimeAgg(fn, col("g")).as("value"))
-    case RateSubquery(kind, inner, w, step) =>
-      // the inner expression's grid values play the samples; the same
-      // reset-aware machinery then runs per series over (g, value)
-      val g0 = ((atEpochSec - w) / step + 1) * step
-      val g1 = (atEpochSec / step) * step
-      val samples = evalGrid(metrics, inner, g0, g1, step, lookbackSec)
-        .select(col("skey"), col("g").as("e"), col("value"))
-      if (kind == "resets" || kind == "changes")
-        PromOps.resetsFromSamples(samples, kind)
-      else PromOps.rateFromSamples(samples, kind,
-        lit(atEpochSec - w), lit(atEpochSec), w)
-    case VecBin(op, l, r, on, ignoring, groupSide, _)
-        if scalarish(l) != scalarish(r) =>
-      // vector op scalar-expression: the scalar side is ONE row by
-      // construction, so the pairing is an explicit broadcast cross
-      // join — every left series sees the same scalar, no shuffle.
-      // Prometheus rejects matching modifiers on scalar operands; so do
-      // we, loudly, rather than silently dropping them (ADVICE r5).
-      require(on.isEmpty && ignoring.isEmpty && groupSide.isEmpty,
-        "on/ignoring/group_* are invalid with a scalar-typed operand")
-      val (vec, sc, scalarOnLeft) =
-        if (scalarish(l)) (r, l, true) else (l, r, false)
-      val vf = evalInstant(metrics, vec, atEpochSec, lookbackSec)
-      PromParser.constFold(sc) match {
-        case Some(v) => // literal-only scalar side: plain column math
-          val value =
-            if (scalarOnLeft) arith2(lit(v), op, col("value"))
-            else arith2(col("value"), op, lit(v))
-          vf.select(col("skey"), value.as("value"))
-        case None =>
-          val sf = broadcast(evalInstant(metrics, sc, atEpochSec, lookbackSec)
-            .select(col("value").as("scv")))
-          val value =
-            if (scalarOnLeft) arith2(col("scv"), op, col("value"))
-            else arith2(col("value"), op, col("scv"))
-          vf.crossJoin(sf).select(col("skey"), value.as("value"))
-      }
-    case VecBin(op, l, r, on, ignoring, groupSide, groupLabels) =>
-      vecBin(evalInstant(metrics, l, atEpochSec, lookbackSec),
-        evalInstant(metrics, r, atEpochSec, lookbackSec), op, on, ignoring,
-        groupSide, groupLabels,
-        leftProvenUnique = uniqueUnder(l, on, ignoring),
-        rightProvenUnique = uniqueUnder(r, on, ignoring),
-        leftKeyed = keyedBy(l), rightKeyed = keyedBy(r))
-    case VecCmp(op, l, r, isBool, on, ignoring)
-        if scalarish(l) != scalarish(r) =>
-      // vector-scalar comparison: filters the vector (or scores it with
-      // bool) against the scalar side's single broadcast value — the
-      // Prometheus semantics the equi-join form would silently miss,
-      // since the scalar side's key is '{}' (ADVICE r5, medium)
-      require(on.isEmpty && ignoring.isEmpty,
-        "on/ignoring are invalid with a scalar-typed comparison operand")
-      val scalarOnLeft = scalarish(l)
-      val (vec, sc) = if (scalarOnLeft) (r, l) else (l, r)
-      val vf = evalInstant(metrics, vec, atEpochSec, lookbackSec)
-      val sf = broadcast(evalInstant(metrics, sc, atEpochSec, lookbackSec)
-        .select(col("value").as("scv")))
-      val pred =
-        if (scalarOnLeft) PromOps.cmpCol(col("scv"), op, col("value"))
-        else PromOps.cmpCol(col("value"), op, col("scv"))
-      val joined = vf.crossJoin(sf)
-      if (isBool) joined.select(col("skey"), pred.as("value"))
-      else joined.filter(pred === 1.0).select(col("skey"), col("value"))
-    case VecCmp(op, l, r, isBool, on, ignoring) =>
-      vecCmp(evalInstant(metrics, l, atEpochSec, lookbackSec),
-        evalInstant(metrics, r, atEpochSec, lookbackSec), op, isBool, on,
-        ignoring,
-        leftProvenUnique = uniqueUnder(l, on, ignoring),
-        rightProvenUnique = uniqueUnder(r, on, ignoring),
-        leftKeyed = keyedBy(l), rightKeyed = keyedBy(r))
-    case TopK(fn, k, inner, by, without) =>
-      topk(evalInstant(metrics, inner, atEpochSec, lookbackSec), fn, k, by, without)
-    case LimitAgg(fn, p, inner, by, without) =>
-      limitAgg(evalInstant(metrics, inner, atEpochSec, lookbackSec), fn, p,
-        by, without)
-    case QuantileOverTime(q, sel, w) =>
-      PromOps.quantileOverTime(
-        PromOps.rangeSelector(matcherFilter(metrics, sel), sel.name,
-          sel.evalAt(atEpochSec), w), q)
-    case MadOverTime(sel, w) =>
-      PromOps.madOverTime(
-        PromOps.rangeSelector(matcherFilter(metrics, sel), sel.name,
-          sel.evalAt(atEpochSec), w))
-    case QuantileSubquery(q, inner, w, step) =>
-      // the SLO idiom: the subquery grid's per-point values ARE the
-      // range samples; the rank machinery only sees (skey, value)
-      val sg0 = ((atEpochSec - w) / step + 1) * step
-      val sg1 = (atEpochSec / step) * step
-      PromOps.quantileOverTime(
-        evalGrid(metrics, inner, sg0, sg1, step, lookbackSec), q)
-    case MadSubquery(inner, w, step) =>
-      val sg0 = ((atEpochSec - w) / step + 1) * step
-      val sg1 = (atEpochSec / step) * step
-      PromOps.madOverTime(
-        evalGrid(metrics, inner, sg0, sg1, step, lookbackSec))
-    case HoltWintersSubquery(inner, w, step, sf, tf) =>
-      val sg0 = ((atEpochSec - w) / step + 1) * step
-      val sg1 = (atEpochSec / step) * step
-      PromOps.holtWintersFromSamples(
-        evalGrid(metrics, inner, sg0, sg1, step, lookbackSec)
-          .select(col("skey"), col("g").as("e"), col("value")), sf, tf)
-    case DerivSubquery(inner, w, step, predict) =>
-      val sg0 = ((atEpochSec - w) / step + 1) * step
-      val sg1 = (atEpochSec / step) * step
-      PromOps.derivFromSamples(
-        evalGrid(metrics, inner, sg0, sg1, step, lookbackSec)
-          .select(col("skey"), col("g").as("e"), col("value")),
-        lit(atEpochSec - w), w, predict)
-    case HistQuantile(q, inner) =>
-      PromOps.histogramQuantile(
-        evalInstant(metrics, inner, atEpochSec, lookbackSec), q)
-    case HistFraction(lo, hi, inner) =>
-      PromOps.histogramFraction(
-        evalInstant(metrics, inner, atEpochSec, lookbackSec), lo, hi)
-    case UnaryFn(fn, inner) =>
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .withColumn("value", unary(fn, col("value")))
-    case Clamp(inner, lo, hi) =>
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .withColumn("value", clampValue(lo, hi))
-    case Deriv(sel, w, predict) =>
-      PromOps.derivOverRange(matcherFilter(metrics, sel), sel.name,
-        sel.evalAt(atEpochSec), w, predict)
-    case RoundFn(inner, to) =>
-      // Prometheus round: nearest multiple of `to`, ties rounded up
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .withColumn("value", floor(col("value") / to + 0.5) * to)
-    case AggQuantile(q, inner, by, without) =>
-      // regroup the instant vector onto the group key, then the same
-      // rank-interpolation machinery as quantile_over_time — quantile
-      // ACROSS series instead of across samples
-      PromOps.quantileOverTime(
-        evalInstant(metrics, inner, atEpochSec, lookbackSec)
-          .withColumn("skey", groupKey(by, without)),
-        q)
-    case CountValues(lbl, inner, by, without) =>
-      // one output series per (group key, formatted value): integers
-      // print without a decimal point (the deterministic subset; float
-      // formatting is engine-specific — stated in the AST doc)
-      val isInt = col("value") === floor(col("value")) &&
-        abs(col("value")) < 1e15
-      val vstr = when(isInt, col("value").cast("long").cast("string"))
-        .otherwise(col("value").cast("string"))
-      val kept = map_filter(groupLabels(by, without), (k, _) => k =!= lit(lbl))
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .withColumn("skey",
-          seriesKeyOf(map_concat(kept, map(lit(lbl), vstr))))
-        .groupBy(col("skey"))
-        .agg(count(lit(1)).cast("double").as("value"))
-    case SetOp(op, l, r, None, None) =>
-      // set semantics on the full series key: semi/anti joins — the
-      // match key is tiny (distinct series), so these broadcast
-      val lf = evalInstant(metrics, l, atEpochSec, lookbackSec)
-      val rf = evalInstant(metrics, r, atEpochSec, lookbackSec)
-      op match {
-        case "and" => lf.join(rf.select(col("skey")).distinct(), Seq("skey"), "left_semi")
-        case "unless" => lf.join(rf.select(col("skey")).distinct(), Seq("skey"), "left_anti")
-        case "or" => lf.unionByName(
-          rf.join(lf.select(col("skey")).distinct(), Seq("skey"), "left_anti"))
-      }
-    case SetOp(op, l, r, on, ignoring) =>
-      // on/ignoring (round 17): the same semi/anti/union joins, keyed on
-      // the PROJECTED match key (kept labels under `on`, complement
-      // under `ignoring`) instead of the full series key — the
-      // `up == 1 and on(job) maintenance` idiom. Output rows keep the
-      // owning side's full labels untouched (set ops never rewrite
-      // labels); only the join key is projected. Distinct projected
-      // keys are at most |series| — broadcastable like the bare form.
-      val lf = evalInstant(metrics, l, atEpochSec, lookbackSec)
-      val rf = evalInstant(metrics, r, atEpochSec, lookbackSec)
-      val lmk = matchKey(on, ignoring, keyedBy(l))
-      val rmk = matchKey(on, ignoring, keyedBy(r))
-      // only the and/unless arms key on the RIGHT side's projected keys
-      // (`or` anti-joins the right against the LEFT's); lazy so the `or`
-      // arm doesn't appear to depend on it (ADVICE r17)
-      lazy val rk = rf.select(rmk.as("mkey")).distinct()
-      op match {
-        case "and" =>
-          lf.withColumn("mkey", lmk).join(rk, Seq("mkey"), "left_semi")
-            .drop("mkey")
-        case "unless" =>
-          lf.withColumn("mkey", lmk).join(rk, Seq("mkey"), "left_anti")
-            .drop("mkey")
-        case "or" => lf.unionByName(
-          rf.withColumn("mkey", rmk)
-            .join(lf.select(lmk.as("mkey")).distinct(), Seq("mkey"),
-              "left_anti")
-            .drop("mkey"))
-      }
-    case LabelJoin(inner, dst, sep, srcs) =>
-      val labels = PromOps.labelsOf(col("skey"))
-      val joined = concat_ws(sep,
-        srcs.map(s => coalesce(labels.getItem(s), lit(""))): _*)
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .withColumn("skey", PromOps.seriesKey(setLabel(labels, dst, joined)))
-    case LabelReplace(inner, dst, repl, src, regex) =>
-      val labels = PromOps.labelsOf(col("skey"))
-      val anchored = "^(?:" + regex + ")$"
-      val srcVal = coalesce(labels.getItem(src), lit("")) // missing matches ""
-      val newKey = when(srcVal.rlike(anchored),
-        PromOps.seriesKey(setLabel(labels, dst,
-          regexp_replace(srcVal, anchored, repl))))
-        .otherwise(col("skey")) // no match: series unchanged
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .withColumn("skey", newKey)
-    case ScalarFn(inner) =>
-      // exactly-one-series -> its value; otherwise NaN (Prometheus)
-      evalInstant(metrics, inner, atEpochSec, lookbackSec)
-        .agg(count(lit(1)).as("n"), min(col("value")).as("v"))
-        .select(lit("{}").as("skey"),
-          when(col("n") === 1, col("v"))
-            .otherwise(lit(Double.NaN)).as("value"))
-    case VectorLit(v) =>
-      metrics.sparkSession.range(1)
-        .select(lit("{}").as("skey"), lit(v).cast("double").as("value"))
-    case NumLit(v) => // literal heading an arithmetic chain: one {} row
-      metrics.sparkSession.range(1)
-        .select(lit("{}").as("skey"), lit(v).cast("double").as("value"))
-    case TimeFn() =>
-      metrics.sparkSession.range(1)
-        .select(lit("{}").as("skey"),
-          lit(atEpochSec.toDouble).as("value"))
-    case TimestampFn(sel) =>
-      PromOps.instantVector(matcherFilter(metrics, sel), sel.name,
-        sel.evalAt(atEpochSec), lookbackSec)
-        .select(col("skey"), col("e").cast("double").as("value"))
-    case Absent(sel) =>
-      // alerting primitive: exactly one 1.0 iff no series matched — a
-      // count aggregate, usable as a subquery leaf. The output labels
-      // are derived from the selector's EQUALITY matchers (they are what
-      // alert routing keys on), as Prometheus does.
-      evalInstant(metrics, sel, atEpochSec, lookbackSec)
-        .agg(count(lit(1)).as("n")).filter(col("n") === 0)
-        .select(lit(absentKey(sel)).as("skey"), lit(1.0).as("value"))
-    case AbsentOT(sel, w) =>
-      // 1 iff the RANGE is empty: no sample from any matching series;
-      // labels from the equality matchers, as for absent()
-      PromOps.rangeSelector(matcherFilter(metrics, sel), sel.name,
-        sel.evalAt(atEpochSec), w)
-        .agg(count(lit(1)).as("n")).filter(col("n") === 0)
-        .select(lit(absentKey(sel)).as("skey"), lit(1.0).as("value"))
-    case HoltWinters(sel, w, sf, tf) =>
-      PromOps.holtWinters(matcherFilter(metrics, sel), sel.name,
-        sel.evalAt(atEpochSec), w, sf, tf)
-    case other =>
-      throw new IllegalArgumentException(s"unsupported instant expr: $other")
-  }
+  /** Evaluate `expr` as an instant query at `atEpochSec`: (skey, value).
+    * It is the one-point grid [t, t] — start() = end() = t — with a 1 s
+    * step, which divides every offset and subquery alignment.
+    */
+  def evalInstant(metrics: DataFrame, expr: Expr, atEpochSec: Long,
+      lookbackSec: Long = PromOps.DefaultLookbackSec): DataFrame =
+    evalGrid(metrics, expr, atEpochSec, atEpochSec, 1L, lookbackSec)
+      .select(col("skey"), col("value"))
 
   /** clamp(v, lo, hi) with lo > hi is NaN for every point, per
     * Prometheus; clamp_min/clamp_max have a single bound and no such
@@ -443,8 +163,6 @@ object PromEval {
       case _ => throw new IllegalArgumentException("both by and without given")
     }
   }
-
-  private def seriesKeyOf(labels: Column): Column = PromOps.seriesKey(labels)
 
   /** Canonical group key (JSON) for a static by/without label list — the
     * codegen-friendly forms ([[PromOps.groupKeyBy]] /
@@ -613,7 +331,6 @@ object PromEval {
       on: Option[Seq[String]], ignoring: Option[Seq[String]],
       groupSide: Option[String] = None,
       groupLabels: Seq[String] = Nil,
-      extraKeys: Seq[String] = Nil,
       leftProvenUnique: Boolean = false,
       rightProvenUnique: Boolean = false,
       leftKeyed: Option[Set[String]] = None,
@@ -622,8 +339,9 @@ object PromEval {
     // to survive the projection gets the identity key (see [[matchKey]])
     val lmkey = matchKey(on, ignoring, leftKeyed)
     val rmkey = matchKey(on, ignoring, rightKeyed)
-    // `extraKeys` (the grid point for range evaluation) ride along in
-    // every join/group key, so a range binop matches per (series, point)
+    // the grid point rides along in every join/group key, so a binop
+    // matches per (series, point)
+    val extraKeys = Seq("g")
     val extras = extraKeys.map(col)
     groupSide match {
       case None =>
@@ -711,13 +429,14 @@ object PromEval {
     */
   private def vecCmp(left: DataFrame, right: DataFrame, op: String,
       isBool: Boolean, on: Option[Seq[String]],
-      ignoring: Option[Seq[String]], extraKeys: Seq[String] = Nil,
+      ignoring: Option[Seq[String]],
       leftProvenUnique: Boolean = false,
       rightProvenUnique: Boolean = false,
       leftKeyed: Option[Set[String]] = None,
       rightKeyed: Option[Set[String]] = None): DataFrame = {
     val lmkey = matchKey(on, ignoring, leftKeyed)
     val rmkey = matchKey(on, ignoring, rightKeyed)
+    val extraKeys = Seq("g") // per (series, point), as in [[vecBin]]
     val extras = extraKeys.map(col)
     // same scoping rule as [[vecBin]]: the guard is paid only under
     // on/ignoring, the only forms where duplicate match keys can exist —
@@ -743,76 +462,58 @@ object PromEval {
       .select(col("skey") +: extras :+ col("lv").as("value"): _*)
   }
 
-  /** topk/bottomk: whole-series selection, deterministic skey tie-break.
-    * Global top-k (no by/without) compiles to orderBy+limit — Spark plans
-    * TakeOrderedAndProject, a distributed per-partition heap + single
-    * merge of k rows, never a full sort. Grouped top-k is a row_number
-    * window over the group key: one shuffle on the group key, heap-sorted
-    * partitions.
+  /** topk/bottomk per grid point: whole-series selection with a
+    * deterministic skey tie-break. Descending value rides as its exact
+    * IEEE negation; a NaN value then sorts LAST under the aggregate's
+    * total order both ways, i.e. NaN never beats a number — Prometheus's
+    * own rule (a `value.desc` sort would put NaN first).
     */
-  private def topk(df: DataFrame, fn: String, k: Int,
-      by: Seq[String], without: Seq[String]): DataFrame = {
-    val ord =
-      if (fn == "topk") Seq(col("value").desc, col("skey").asc)
-      else Seq(col("value").asc, col("skey").asc)
-    (by, without) match {
-      case (Nil, Nil) => df.orderBy(ord: _*).limit(k).select(col("skey"), col("value"))
-      case _ =>
-        // grouped form: the K-bounded native aggregate, never a per-group
-        // window sort (series per group can be corpus-sized). Descending
-        // value rides as its exact IEEE negation; a NaN value then sorts
-        // LAST under the aggregate's total order, i.e. NaN never beats a
-        // number — which is Prometheus's own topk rule (the former
-        // window's `desc` put NaN first). bottomk's ascending order
-        // already sorts NaN last both ways.
-        val gkeyCol: Column = (by, without) match {
-          case (b, Nil) =>
-            val keep = array(b.map(lit): _*)
-            PromOps.seriesKey(map_filter(PromOps.labelsOf(col("skey")),
-              (key, _) => array_contains(keep, key)))
-          case (Nil, w) =>
-            val drop = array(w.map(lit): _*)
-            PromOps.seriesKey(map_filter(PromOps.labelsOf(col("skey")),
-              (key, _) => !array_contains(drop, key)))
-          case _ => throw new IllegalArgumentException("both by and without given")
-        }
-        val vOrd = if (fn == "topk") (-col("value")).as("v") else col("value").as("v")
-        graft.ext.Ranking.explodeTopK(
-          df.withColumn("gkey", gkeyCol),
-          Seq("gkey"),
-          struct(vOrd, col("skey")),
-          struct(col("skey"), col("value")), k)
-          .select(col("skey"), col("value"))
-    }
+  private def topk(df: DataFrame, fn: String, k: Int, by: Seq[String],
+      without: Seq[String], onePoint: Boolean): DataFrame = {
+    val v = if (fn == "topk") -col("value") else col("value")
+    perPointTopK(df, by, without, Seq(v, col("skey")), k, onePoint)
   }
 
-  /** limitk / limit_ratio on an instant vector (deterministic stated
-    * deviations — see [[PromParser.LimitAgg]]). limitk's global form is a
-    * TakeOrderedAndProject (k smallest series keys, never a full sort);
-    * the grouped form is one row_number window. limit_ratio is a pure
-    * filter on the 60-bit-md5 unit-interval hash of the series key —
-    * no shuffle at all, and the same series survive on every evaluation
-    * and every engine.
+  /** limitk / limit_ratio per grid point (deterministic stated
+    * deviations — see [[PromParser.LimitAgg]]). limitk keeps the k
+    * lexicographically-smallest series keys. limit_ratio is a pure
+    * filter on the 60-bit-md5 unit-interval hash of the series key — no
+    * shuffle at all; the hash ignores g, so a series is kept or dropped
+    * across the whole range (Prometheus's documented "consistent
+    * sampling across steps") and on every engine.
     */
-  private def limitAgg(df: DataFrame, fn: String, p: Double,
-      by: Seq[String], without: Seq[String]): DataFrame = fn match {
+  private def limitAgg(df: DataFrame, fn: String, p: Double, by: Seq[String],
+      without: Seq[String], onePoint: Boolean): DataFrame = fn match {
     case "limitk" =>
-      (by, without) match {
-        case (Nil, Nil) =>
-          df.orderBy(col("skey").asc).limit(p.toInt)
-            .select(col("skey"), col("value"))
-        case _ =>
-          // K-bounded native aggregate (k lexicographically-smallest
-          // series keys per group), same shape as grouped topk
-          graft.ext.Ranking.explodeTopK(
-            df.withColumn("gkey", groupKey(by, without)),
-            Seq("gkey"),
-            struct(col("skey")),
-            struct(col("skey"), col("value")), p.toInt)
-            .select(col("skey"), col("value"))
-      }
+      perPointTopK(df, by, without, Seq(col("skey")), p.toInt, onePoint)
     case "limit_ratio" =>
-      df.filter(ratioKeep(p)).select(col("skey"), col("value"))
+      df.filter(ratioKeep(p)).select(col("skey"), col("g"), col("value"))
+  }
+
+  /** The k rows of least `ord` (ascending, field by field) per
+    * (group key, g), or per g alone when neither by nor without is
+    * given: the K-bounded native aggregate, never a per-group window
+    * sort (series per group can be corpus-sized) — map-side partials
+    * ship at most k rows per group. The global form on a one-point grid
+    * is one group, so it is orderBy + limit instead: Spark plans
+    * TakeOrderedAndProject, the same per-partition heap and k-row merge
+    * without the aggregate's extra shuffle.
+    */
+  private def perPointTopK(df: DataFrame, by: Seq[String],
+      without: Seq[String], ord: Seq[Column], k: Int,
+      onePoint: Boolean): DataFrame = {
+    val global = by.isEmpty && without.isEmpty
+    val top =
+      if (global && onePoint) df.orderBy(ord.map(_.asc): _*).limit(k)
+      else {
+        val (keyed, gcols) =
+          if (global) (df, Seq("g"))
+          else (df.withColumn("gkey", groupKey(by, without)), Seq("gkey", "g"))
+        graft.ext.Ranking.explodeTopK(keyed, gcols,
+          struct(ord.zipWithIndex.map { case (c, i) => c.as(s"o$i") }: _*),
+          struct(col("skey"), col("value")), k)
+      }
+    top.select(col("skey"), col("g"), col("value"))
   }
 
   /** The limit_ratio keep predicate: h(skey) ∈ [0,1) from the repo's
@@ -850,344 +551,297 @@ object PromEval {
   def evalGrid(metrics: DataFrame, expr0: Expr, g0: Long, g1: Long,
       stepSec: Long, lookbackSec: Long): DataFrame = {
     // range query: start()/end() pin to the range's own bounds. By the
-    // time a subquery recursion re-enters here the top-level resolve has
-    // already run (hasAtEdge is false), so inner selectors can never pin
-    // to a subquery's derived grid.
+    // time a subquery recursion re-enters the evaluator the top-level
+    // resolve has already run, so inner selectors can never pin to a
+    // subquery's derived grid.
     val expr =
       if (hasAtEdge(expr0)) resolveAtEdges(expr0, g0, g1) else expr0
     evalGridResolved(metrics, expr, g0, g1, stepSec, lookbackSec)
   }
 
   private def evalGridResolved(metrics: DataFrame, expr: Expr, g0: Long,
-      g1: Long, stepSec: Long, lookbackSec: Long): DataFrame = expr match {
-    case ts: TimeShift if ts.atSec.nonEmpty =>
-      // @-pinned subquery on a grid: one instant evaluation, replicated
-      // across the grid points (the selector pinnedGrid discipline)
-      pinnedGrid(metrics, ts, g0, g1, stepSec, lookbackSec)
-    case TimeShift(inner, off, None, _) =>
-      // offset subquery per grid point: evaluate the shifted grid and
-      // relabel, exactly the selector-offset rule
+      g1: Long, stepSec: Long, lookbackSec: Long): DataFrame = {
+    def ev(e: Expr): DataFrame =
+      evalGridResolved(metrics, e, g0, g1, stepSec, lookbackSec)
+    // offset shifts every evaluation point: the value at g is the subtree
+    // at g − offset, so evaluate the shifted grid and relabel. The shift
+    // must keep the grid step-aligned — always true on a one-point grid,
+    // whose step is 1 s.
+    def shifted(off: Long)(body: (Long, Long) => DataFrame): DataFrame = {
       require(off % stepSec == 0,
-        s"subquery offset ${off}s must be a multiple of the ${stepSec}s step")
-      val base = evalGrid(metrics, inner, g0 - off, g1 - off, stepSec, lookbackSec)
+        s"offset ${off}s must be a multiple of the ${stepSec}s step")
+      val base = body(g0 - off, g1 - off)
       if (off == 0) base else base.withColumn("g", col("g") + off)
-    case s: Selector if s.atSec.nonEmpty =>
-      pinnedGrid(metrics, s, g0, g1, stepSec, lookbackSec)
-    case s: Selector =>
-      // offset shifts every evaluation point: value at g is the selector
-      // at g - offset, so evaluate the shifted grid and relabel. The
-      // offset must keep the grid step-aligned.
-      require(s.offsetSec % stepSec == 0,
-        s"offset ${s.offsetSec}s must be a multiple of the ${stepSec}s step")
-      val off = s.offsetSec
-      val base = PromOps.rangeEval(matcherFilter(metrics, s), s.name,
-        g0 - off, g1 - off, stepSec, lookbackSec)
-      if (off == 0) base else base.withColumn("g", col("g") + off)
-    case BoolCmp(inner, op, v) =>
-      evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-        .withColumn("value", PromOps.boolCmp(col("value"), op, v))
-    case FilterCmp(inner, op, v) =>
-      evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-        .filter(PromOps.boolCmp(col("value"), op, v) === 1.0)
-    case Arith(inner, op, v) =>
-      evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-        .withColumn("value", arith(col("value"), op, v))
-    case Agg(fn, inner, by, without) =>
-      regroup(evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec),
-        fn, by, without, Seq("g"))
-    case OverTime(_, sel, _) if sel.atSec.nonEmpty =>
-      pinnedGrid(metrics, expr, g0, g1, stepSec, lookbackSec)
-    case OverTime(fn, sel, w) =>
-      // moving-window family at range — one explode + one aggregation,
-      // linear in samples × window/step (PromOps.windowGrid)
-      require(sel.offsetSec % stepSec == 0,
-        s"offset ${sel.offsetSec}s must be a multiple of the ${stepSec}s step")
-      val off = sel.offsetSec
-      val base = PromOps.windowGrid(matcherFilter(metrics, sel), sel.name,
-        g0 - off, g1 - off, stepSec, w)
-        .groupBy(col("skey"), col("g"))
-        .agg(overTimeAgg(fn, col("e")).as("value"))
-      if (off == 0) base else base.withColumn("g", col("g") + off)
-    case Rate(_, sel, _) if sel.atSec.nonEmpty =>
-      pinnedGrid(metrics, expr, g0, g1, stepSec, lookbackSec)
-    case Rate(kind, sel, w) =>
-      require(sel.offsetSec % stepSec == 0,
-        s"offset ${sel.offsetSec}s must be a multiple of the ${stepSec}s step")
-      val off = sel.offsetSec
-      val base = PromOps.rateOverGrid(matcherFilter(metrics, sel), sel.name,
-        g0 - off, g1 - off, stepSec, w, kind)
-      if (off == 0) base else base.withColumn("g", col("g") + off)
-    case VecBin(op, l, r, on, ignoring, groupSide, _)
-        if scalarish(l) != scalarish(r) =>
-      // vector op scalar per grid point: the scalar side is one row per
-      // point, so the pairing is a broadcast equi-join on g alone
-      require(on.isEmpty && ignoring.isEmpty && groupSide.isEmpty,
-        "on/ignoring/group_* are invalid with a scalar-typed operand")
-      val (vec, sc, scalarOnLeft) =
-        if (scalarish(l)) (r, l, true) else (l, r, false)
-      val vf = evalGrid(metrics, vec, g0, g1, stepSec, lookbackSec)
-      PromParser.constFold(sc) match {
-        case Some(v) =>
-          val value =
-            if (scalarOnLeft) arith2(lit(v), op, col("value"))
-            else arith2(col("value"), op, lit(v))
-          vf.select(col("skey"), col("g"), value.as("value"))
-        case None =>
-          val sf = broadcast(evalGrid(metrics, sc, g0, g1, stepSec, lookbackSec)
-            .select(col("g"), col("value").as("scv")))
-          val value =
-            if (scalarOnLeft) arith2(col("scv"), op, col("value"))
-            else arith2(col("value"), op, col("scv"))
-          vf.join(sf, "g").select(col("skey"), col("g"), value.as("value"))
-      }
-    case VecBin(op, l, r, on, ignoring, groupSide, groupLabels) =>
-      // per-point vector matching: the ratio-of-rates range panel.
-      // The uniqueness proofs carry per grid point: a by-aggregate is
-      // one row per (group key, g), and `g` rides every join key.
-      vecBin(evalGrid(metrics, l, g0, g1, stepSec, lookbackSec),
-        evalGrid(metrics, r, g0, g1, stepSec, lookbackSec), op, on,
-        ignoring, groupSide, groupLabels, extraKeys = Seq("g"),
-        leftProvenUnique = uniqueUnder(l, on, ignoring),
-        rightProvenUnique = uniqueUnder(r, on, ignoring),
-        leftKeyed = keyedBy(l), rightKeyed = keyedBy(r))
-    case UnaryFn(fn, inner) =>
-      evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-        .withColumn("value", unary(fn, col("value")))
-    case RoundFn(inner, to) =>
-      evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-        .withColumn("value", floor(col("value") / to + 0.5) * to)
-    case Clamp(inner, lo, hi) =>
-      evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-        .withColumn("value", clampValue(lo, hi))
-    case VecCmp(op, l, r, isBool, on, ignoring)
-        if scalarish(l) != scalarish(r) =>
-      // vector-scalar comparison per grid point (see the instant twin)
-      require(on.isEmpty && ignoring.isEmpty,
-        "on/ignoring are invalid with a scalar-typed comparison operand")
-      val scalarOnLeft = scalarish(l)
-      val (vec, sc) = if (scalarOnLeft) (r, l) else (l, r)
-      val vf = evalGrid(metrics, vec, g0, g1, stepSec, lookbackSec)
-      val sf = broadcast(evalGrid(metrics, sc, g0, g1, stepSec, lookbackSec)
-        .select(col("g"), col("value").as("scv")))
-      val pred =
-        if (scalarOnLeft) PromOps.cmpCol(col("scv"), op, col("value"))
-        else PromOps.cmpCol(col("value"), op, col("scv"))
-      val joined = vf.join(sf, "g")
-      if (isBool) joined.select(col("skey"), col("g"), pred.as("value"))
-      else joined.filter(pred === 1.0)
-        .select(col("skey"), col("g"), col("value"))
-    case VecCmp(op, l, r, isBool, on, ignoring) =>
-      vecCmp(evalGrid(metrics, l, g0, g1, stepSec, lookbackSec),
-        evalGrid(metrics, r, g0, g1, stepSec, lookbackSec), op, isBool, on,
-        ignoring, extraKeys = Seq("g"),
-        leftProvenUnique = uniqueUnder(l, on, ignoring),
-        rightProvenUnique = uniqueUnder(r, on, ignoring),
-        leftKeyed = keyedBy(l), rightKeyed = keyedBy(r))
-    case SetOp(op, l, r, None, None) =>
-      // per-point set semantics on the series key
-      val lf = evalGrid(metrics, l, g0, g1, stepSec, lookbackSec)
-      val rf = evalGrid(metrics, r, g0, g1, stepSec, lookbackSec)
-      lazy val rk = rf.select(col("skey"), col("g")).distinct()
-      op match {
-        case "and" => lf.join(rk, Seq("skey", "g"), "left_semi")
-        case "unless" => lf.join(rk, Seq("skey", "g"), "left_anti")
-        case "or" => lf.unionByName(
-          rf.join(lf.select(col("skey"), col("g")).distinct(),
-            Seq("skey", "g"), "left_anti"))
-      }
-    case SetOp(op, l, r, on, ignoring) =>
-      // projected-key matching per grid point (the instant-eval round-17
-      // on/ignoring semantics, with the grid column joining the key)
-      val lf = evalGrid(metrics, l, g0, g1, stepSec, lookbackSec)
-      val rf = evalGrid(metrics, r, g0, g1, stepSec, lookbackSec)
-      val lmk = matchKey(on, ignoring, keyedBy(l))
-      val rmk = matchKey(on, ignoring, keyedBy(r))
-      // lazy for the same reason as the instant twin: `or` never reads it
-      lazy val rk = rf.select(rmk.as("mkey"), col("g")).distinct()
-      op match {
-        case "and" =>
-          lf.withColumn("mkey", lmk).join(rk, Seq("mkey", "g"), "left_semi")
-            .drop("mkey")
-        case "unless" =>
-          lf.withColumn("mkey", lmk).join(rk, Seq("mkey", "g"), "left_anti")
-            .drop("mkey")
-        case "or" => lf.unionByName(
-          rf.withColumn("mkey", rmk)
-            .join(lf.select(lmk.as("mkey"), col("g")).distinct(),
-              Seq("mkey", "g"), "left_anti")
-            .drop("mkey"))
-      }
-    case Deriv(sel, _, _) if sel.atSec.nonEmpty =>
-      pinnedGrid(metrics, expr, g0, g1, stepSec, lookbackSec)
-    case Deriv(sel, w, predict) =>
-      // offset: evaluate the shifted grid and relabel, as for OverTime
-      require(sel.offsetSec % stepSec == 0,
-        s"offset ${sel.offsetSec}s must be a multiple of the ${stepSec}s step")
-      val off = sel.offsetSec
-      val base = PromOps.derivOverGrid(matcherFilter(metrics, sel), sel.name,
-        g0 - off, g1 - off, stepSec, w, predict)
-      if (off == 0) base else base.withColumn("g", col("g") + off)
-    case QuantileOverTime(_, sel, _) if sel.atSec.nonEmpty =>
-      pinnedGrid(metrics, expr, g0, g1, stepSec, lookbackSec)
-    case QuantileOverTime(q, sel, w) =>
-      require(sel.offsetSec % stepSec == 0,
-        s"offset ${sel.offsetSec}s must be a multiple of the ${stepSec}s step")
-      val off = sel.offsetSec
-      val base = PromOps.quantileOverTime(
-        PromOps.windowGrid(matcherFilter(metrics, sel), sel.name,
-          g0 - off, g1 - off, stepSec, w),
-        q, extraKeys = Seq("g"))
-      if (off == 0) base else base.withColumn("g", col("g") + off)
-    case MadOverTime(sel, _) if sel.atSec.nonEmpty =>
-      pinnedGrid(metrics, expr, g0, g1, stepSec, lookbackSec)
-    case MadOverTime(sel, w) =>
-      require(sel.offsetSec % stepSec == 0,
-        s"offset ${sel.offsetSec}s must be a multiple of the ${stepSec}s step")
-      val off = sel.offsetSec
-      val base = PromOps.madOverTime(
-        PromOps.windowGrid(matcherFilter(metrics, sel), sel.name,
-          g0 - off, g1 - off, stepSec, w), extraKeys = Seq("g"))
-      if (off == 0) base else base.withColumn("g", col("g") + off)
-    case Absent(sel) if sel.atSec.nonEmpty =>
-      pinnedGrid(metrics, expr, g0, g1, stepSec, lookbackSec)
-    case Absent(sel) =>
-      // per-point absence of the instant vector: grid points where no
-      // sample is visible under the staleness rule — anti-join of the
-      // dense grid against the sparse presence set
-      require(sel.offsetSec == 0,
-        "offset on a grid absent() is unsupported (stated)")
-      val present = PromOps.rangeEval(matcherFilter(metrics, sel), sel.name,
-        g0, g1, stepSec, lookbackSec).select(col("g")).distinct()
-      gridFrame(metrics, g0, g1, stepSec)
-        .join(broadcast(present), Seq("g"), "left_anti")
-        .select(lit(absentKey(sel)).as("skey"), col("g"), lit(1.0).as("value"))
-    case AbsentOT(sel, _) if sel.atSec.nonEmpty =>
-      pinnedGrid(metrics, expr, g0, g1, stepSec, lookbackSec)
-    case AbsentOT(sel, w) =>
-      require(sel.offsetSec == 0,
-        "offset on a grid absent_over_time() is unsupported (stated)")
-      val present = PromOps.windowGrid(matcherFilter(metrics, sel), sel.name,
-        g0, g1, stepSec, w).select(col("g")).distinct()
-      gridFrame(metrics, g0, g1, stepSec)
-        .join(broadcast(present), Seq("g"), "left_anti")
-        .select(lit(absentKey(sel)).as("skey"), col("g"), lit(1.0).as("value"))
-    case HistQuantile(q, inner) =>
-      PromOps.histogramQuantile(
-        evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec),
-        q, extraKeys = Seq("g"))
-    case HistFraction(lo, hi, inner) =>
-      PromOps.histogramFraction(
-        evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec),
-        lo, hi, extraKeys = Seq("g"))
-    case NumLit(v) =>
-      gridFrame(metrics, g0, g1, stepSec)
-        .withColumn("value", lit(v).cast("double"))
-    case VectorLit(v) =>
-      gridFrame(metrics, g0, g1, stepSec)
-        .withColumn("value", lit(v).cast("double"))
-    case TimeFn() => // time() on a grid is the grid point itself
-      gridFrame(metrics, g0, g1, stepSec)
-        .withColumn("value", col("g").cast("double"))
-    case ScalarFn(inner) =>
-      // scalar() per grid point: the single series' value where exactly
-      // one series exists at that point, NaN otherwise — including points
-      // where the inner vector is EMPTY, so the sparse grid left-joins
-      // against the dense one
-      val agg = evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-        .groupBy(col("g"))
-        .agg(count(lit(1)).as("n"), min(col("value")).as("v"))
-      gridFrame(metrics, g0, g1, stepSec)
-        .join(broadcast(agg), Seq("g"), "left")
-        .select(col("skey"), col("g"),
-          when(col("n") === 1, col("v"))
-            .otherwise(lit(Double.NaN)).as("value"))
-    case HoltWinters(sel, _, _, _) if sel.atSec.nonEmpty =>
-      pinnedGrid(metrics, expr, g0, g1, stepSec, lookbackSec)
-    case HoltWinters(sel, w, sf, tf) =>
-      require(sel.offsetSec % stepSec == 0,
-        s"offset ${sel.offsetSec}s must be a multiple of the ${stepSec}s step")
-      val off = sel.offsetSec
-      val base = PromOps.holtWintersGrid(matcherFilter(metrics, sel), sel.name,
-        g0 - off, g1 - off, stepSec, w, sf, tf)
-      if (off == 0) base else base.withColumn("g", col("g") + off)
-    case TopK(fn, k, inner, by, without) =>
-      // top-k PER GRID POINT: the grid point joins the window partition
-      // key, so the global form is a per-point heap, not a global sort
-      import org.apache.spark.sql.expressions.Window
-      val df = evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-      val ord =
-        if (fn == "topk") Seq(col("value").desc, col("skey").asc)
-        else Seq(col("value").asc, col("skey").asc)
-      val parts: Seq[Column] = (by, without) match {
-        case (Nil, Nil) => Seq(col("g"))
-        case _ => Seq(groupKey(by, without), col("g"))
-      }
-      df.withColumn("rn",
-          row_number().over(Window.partitionBy(parts: _*).orderBy(ord: _*)))
-        .filter(col("rn") <= k)
-        .select(col("skey"), col("g"), col("value"))
-    case OverTimeSubquery(fn, inner, w, sstep) =>
-      subqueryPoints(metrics, inner, w, sstep, g0, g1, stepSec, lookbackSec)
-        .groupBy(col("skey"), col("og"))
-        .agg(overTimeAgg(fn, col("ig")).as("value"))
-        .select(col("skey"), col("og").as("g"), col("value"))
-    case RateSubquery(kind, inner, w, sstep) =>
-      val pts = subqueryPoints(metrics, inner, w, sstep, g0, g1, stepSec,
-          lookbackSec)
-        .select(col("skey"), col("og").as("g"), col("ig").as("e"),
-          col("value"))
-      if (kind == "resets" || kind == "changes")
-        PromOps.resetsFromSamples(pts, kind, extraKeys = Seq("g"))
-          .select(col("skey"), col("g"), col("value"))
-      else
-        PromOps.rateFromSamples(pts, kind, col("g") - w, col("g"), w,
+    }
+    // a range function's per-point samples (skey, g, e, value): a range
+    // selector's window (g − w, g] (PromOps.windowGrid — one explode,
+    // linear in samples × window/step) or a subquery's inner points
+    def windowed(sel: Selector, w: Long)(kernel: DataFrame => DataFrame) =
+      shifted(sel.offsetSec)((a, b) => kernel(PromOps.windowGrid(
+        matcherFilter(metrics, sel), sel.name, a, b, stepSec, w)))
+    def subquery(inner: Expr, w: Long, sstep: Long)(
+        kernel: DataFrame => DataFrame) =
+      kernel(subqueryPoints(metrics, inner, w, sstep, g0, g1, stepSec,
+        lookbackSec))
+    // the scalar-typed side `sc` (one row per point) as column `scv` beside
+    // every row of `vf`: a broadcast equi-join on g — on a one-point grid
+    // a cross join with its one row, which needs no key
+    def withScalar(vf: DataFrame, sc: Expr): DataFrame = {
+      val sf = ev(sc).select(col("g"), col("value").as("scv"))
+      if (g0 == g1) vf.crossJoin(broadcast(sf.drop("g")))
+      else vf.join(broadcast(sf), "g")
+    }
+    expr match {
+      case Pinned(at) =>
+        pinnedGrid(metrics, unpin(expr), at, g0, g1, stepSec, lookbackSec)
+      case TimeShift(inner, off, _, _) =>
+        // offset subquery per grid point: the selector-offset rule
+        shifted(off)((a, b) =>
+          evalGridResolved(metrics, inner, a, b, stepSec, lookbackSec))
+      case s: Selector =>
+        shifted(s.offsetSec)((a, b) => PromOps.rangeEval(
+          matcherFilter(metrics, s), s.name, a, b, stepSec, lookbackSec))
+      case TimestampFn(s) =>
+        // the visible sample's own epoch second at each point
+        shifted(s.offsetSec)((a, b) => PromOps.latestAtGrid(
+          matcherFilter(metrics, s), s.name, a, b, stepSec, lookbackSec))
+          .select(col("skey"), col("g"), col("e").cast("double").as("value"))
+      case BoolCmp(inner, op, v) =>
+        ev(inner).withColumn("value", PromOps.boolCmp(col("value"), op, v))
+      case FilterCmp(inner, op, v) =>
+        ev(inner).filter(PromOps.boolCmp(col("value"), op, v) === 1.0)
+      case Arith(inner, op, v) =>
+        ev(inner).withColumn("value", arith(col("value"), op, v))
+      case UnaryFn(fn, inner) =>
+        ev(inner).withColumn("value", unary(fn, col("value")))
+      case RoundFn(inner, to) =>
+        // Prometheus round: nearest multiple of `to`, ties rounded up
+        ev(inner).withColumn("value", floor(col("value") / to + 0.5) * to)
+      case Clamp(inner, lo, hi) =>
+        ev(inner).withColumn("value", clampValue(lo, hi))
+      case Agg(fn, inner, by, without) =>
+        regroup(ev(inner), fn, by, without)
+      case AggQuantile(q, inner, by, without) =>
+        // regroup onto the group key, then the same rank-interpolation
+        // machinery as quantile_over_time — quantile ACROSS series instead
+        // of across samples
+        PromOps.quantileOverTime(
+          ev(inner).withColumn("skey", groupKey(by, without)), q,
           extraKeys = Seq("g"))
+      case CountValues(lbl, inner, by, without) =>
+        // one output series per (group key, formatted value): integers
+        // print without a decimal point (the deterministic subset; float
+        // formatting is engine-specific — stated in the AST doc)
+        val isInt = col("value") === floor(col("value")) &&
+          abs(col("value")) < 1e15
+        val vstr = when(isInt, col("value").cast("long").cast("string"))
+          .otherwise(col("value").cast("string"))
+        val kept = map_filter(groupLabels(by, without), (k, _) => k =!= lit(lbl))
+        ev(inner)
+          .withColumn("skey",
+            PromOps.seriesKey(map_concat(kept, map(lit(lbl), vstr))))
+          .groupBy(col("skey"), col("g"))
+          .agg(count(lit(1)).cast("double").as("value"))
+      case OverTime(fn, sel, w) => windowed(sel, w)(overTime(fn))
+      case OverTimeSubquery(fn, inner, w, sstep) =>
+        subquery(inner, w, sstep)(overTime(fn))
+      case Rate(kind, sel, w) => windowed(sel, w)(rateFamily(kind, w))
+      case RateSubquery(kind, inner, w, sstep) =>
+        // the inner expression's points play the samples; the same
+        // reset-aware machinery then runs per (series, point)
+        subquery(inner, w, sstep)(rateFamily(kind, w))
+      case Deriv(sel, w, predict) => windowed(sel, w)(deriv(w, predict))
+      case DerivSubquery(inner, w, sstep, predict) =>
+        subquery(inner, w, sstep)(deriv(w, predict))
+      case QuantileOverTime(q, sel, w) =>
+        windowed(sel, w)(PromOps.quantileOverTime(_, q, extraKeys = Seq("g")))
+      case QuantileSubquery(q, inner, w, sstep) =>
+        // the SLO idiom: the subquery's per-point values ARE the samples
+        subquery(inner, w, sstep)(
+          PromOps.quantileOverTime(_, q, extraKeys = Seq("g")))
+      case MadOverTime(sel, w) =>
+        windowed(sel, w)(PromOps.madOverTime(_, extraKeys = Seq("g")))
+      case MadSubquery(inner, w, sstep) =>
+        subquery(inner, w, sstep)(PromOps.madOverTime(_, extraKeys = Seq("g")))
+      case HoltWinters(sel, w, sf, tf) =>
+        windowed(sel, w)(
+          PromOps.holtWintersFromSamples(_, sf, tf, extraKeys = Seq("g")))
+      case HoltWintersSubquery(inner, w, sstep, sf, tf) =>
+        subquery(inner, w, sstep)(
+          PromOps.holtWintersFromSamples(_, sf, tf, extraKeys = Seq("g")))
+      case VecBin(op, l, r, on, ignoring, groupSide, _)
+          if scalarish(l) != scalarish(r) =>
+        // vector op scalar-expression: the scalar side is ONE row per grid
+        // point by construction, so the pairing is a broadcast
+        // (withScalar) — every series sees the same scalar, no shuffle.
+        // Prometheus rejects matching modifiers on scalar operands; so do
+        // we, loudly, rather than silently dropping them (ADVICE r5).
+        require(on.isEmpty && ignoring.isEmpty && groupSide.isEmpty,
+          "on/ignoring/group_* are invalid with a scalar-typed operand")
+        val (vec, sc, scalarOnLeft) =
+          if (scalarish(l)) (r, l, true) else (l, r, false)
+        val vf = ev(vec)
+        PromParser.constFold(sc) match {
+          case Some(v) => // literal-only scalar side: plain column math
+            val value =
+              if (scalarOnLeft) arith2(lit(v), op, col("value"))
+              else arith2(col("value"), op, lit(v))
+            vf.select(col("skey"), col("g"), value.as("value"))
+          case None =>
+            val value =
+              if (scalarOnLeft) arith2(col("scv"), op, col("value"))
+              else arith2(col("value"), op, col("scv"))
+            withScalar(vf, sc).select(col("skey"), col("g"), value.as("value"))
+        }
+      case VecBin(op, l, r, on, ignoring, groupSide, groupLabels) =>
+        // per-point vector matching: the ratio-of-rates panel. The
+        // uniqueness proofs carry per grid point: a by-aggregate is one
+        // row per (group key, g), and `g` rides every join key.
+        vecBin(ev(l), ev(r), op, on, ignoring, groupSide, groupLabels,
+          leftProvenUnique = uniqueUnder(l, on, ignoring),
+          rightProvenUnique = uniqueUnder(r, on, ignoring),
+          leftKeyed = keyedBy(l), rightKeyed = keyedBy(r))
+      case VecCmp(op, l, r, isBool, on, ignoring)
+          if scalarish(l) != scalarish(r) =>
+        // vector-scalar comparison: filters the vector (or scores it with
+        // bool) against the scalar side's broadcast value at each point —
+        // the Prometheus semantics the equi-join form would silently miss,
+        // since the scalar side's key is '{}' (ADVICE r5, medium)
+        require(on.isEmpty && ignoring.isEmpty,
+          "on/ignoring are invalid with a scalar-typed comparison operand")
+        val scalarOnLeft = scalarish(l)
+        val (vec, sc) = if (scalarOnLeft) (r, l) else (l, r)
+        val pred =
+          if (scalarOnLeft) PromOps.cmpCol(col("scv"), op, col("value"))
+          else PromOps.cmpCol(col("value"), op, col("scv"))
+        val joined = withScalar(ev(vec), sc)
+        if (isBool) joined.select(col("skey"), col("g"), pred.as("value"))
+        else joined.filter(pred === 1.0)
           .select(col("skey"), col("g"), col("value"))
-    case QuantileSubquery(q, inner, w, sstep) =>
-      PromOps.quantileOverTime(
-        subqueryPoints(metrics, inner, w, sstep, g0, g1, stepSec, lookbackSec)
-          .select(col("skey"), col("og").as("g"), col("value")),
-        q, extraKeys = Seq("g"))
-    case MadSubquery(inner, w, sstep) =>
-      PromOps.madOverTime(
-        subqueryPoints(metrics, inner, w, sstep, g0, g1, stepSec, lookbackSec)
-          .select(col("skey"), col("og").as("g"), col("value")),
-        extraKeys = Seq("g"))
-    case HoltWintersSubquery(inner, w, sstep, sf, tf) =>
-      PromOps.holtWintersFromSamples(
-        subqueryPoints(metrics, inner, w, sstep, g0, g1, stepSec, lookbackSec)
-          .select(col("skey"), col("og").as("g"), col("ig").as("e"),
-            col("value")),
-        sf, tf, extraKeys = Seq("g"))
-    case DerivSubquery(inner, w, sstep, predict) =>
-      PromOps.derivFromSamples(
-        subqueryPoints(metrics, inner, w, sstep, g0, g1, stepSec, lookbackSec)
-          .select(col("skey"), col("og").as("g"), col("ig").as("e"),
-            col("value")),
-        col("g") - w, w, predict, extraKeys = Seq("g"))
-    case LimitAgg(fn, p, inner, by, without) =>
-      // per grid point, same deterministic rules as the instant form;
-      // limit_ratio's hash ignores g, so a series is kept or dropped
-      // uniformly across the whole range — Prometheus's documented
-      // "consistent sampling across steps" property for free
-      import org.apache.spark.sql.expressions.Window
-      val df = evalGrid(metrics, inner, g0, g1, stepSec, lookbackSec)
-      fn match {
-        case "limitk" =>
-          val parts: Seq[Column] = (by, without) match {
-            case (Nil, Nil) => Seq(col("g"))
-            case _ => Seq(groupKey(by, without), col("g"))
-          }
-          df.withColumn("rn", row_number().over(
-              Window.partitionBy(parts: _*).orderBy(col("skey").asc)))
-            .filter(col("rn") <= p.toInt)
-            .select(col("skey"), col("g"), col("value"))
-        case "limit_ratio" =>
-          df.filter(ratioKeep(p)).select(col("skey"), col("g"), col("value"))
-      }
-    case other =>
-      throw new IllegalArgumentException(s"unsupported grid expr: $other")
+      case VecCmp(op, l, r, isBool, on, ignoring) =>
+        vecCmp(ev(l), ev(r), op, isBool, on, ignoring,
+          leftProvenUnique = uniqueUnder(l, on, ignoring),
+          rightProvenUnique = uniqueUnder(r, on, ignoring),
+          leftKeyed = keyedBy(l), rightKeyed = keyedBy(r))
+      case SetOp(op, l, r, None, None) =>
+        // per-point set semantics on the full series key: semi/anti joins
+        // — the match key is tiny (distinct series), so these broadcast
+        val lf = ev(l)
+        val rf = ev(r)
+        lazy val rk = rf.select(col("skey"), col("g")).distinct()
+        op match {
+          case "and" => lf.join(rk, Seq("skey", "g"), "left_semi")
+          case "unless" => lf.join(rk, Seq("skey", "g"), "left_anti")
+          case "or" => lf.unionByName(
+            rf.join(lf.select(col("skey"), col("g")).distinct(),
+              Seq("skey", "g"), "left_anti"))
+        }
+      case SetOp(op, l, r, on, ignoring) =>
+        // on/ignoring (round 17): the same semi/anti/union joins, keyed on
+        // the PROJECTED match key (kept labels under `on`, complement
+        // under `ignoring`) and g instead of the full series key — the
+        // `up == 1 and on(job) maintenance` idiom. Output rows keep the
+        // owning side's full labels untouched (set ops never rewrite
+        // labels); only the join key is projected. Distinct projected
+        // keys are at most |series| — broadcastable like the bare form.
+        val lf = ev(l)
+        val rf = ev(r)
+        val lmk = matchKey(on, ignoring, keyedBy(l))
+        val rmk = matchKey(on, ignoring, keyedBy(r))
+        // only the and/unless arms key on the RIGHT side's projected keys
+        // (`or` anti-joins the right against the LEFT's); lazy so the `or`
+        // arm doesn't appear to depend on it (ADVICE r17)
+        lazy val rk = rf.select(rmk.as("mkey"), col("g")).distinct()
+        op match {
+          case "and" =>
+            lf.withColumn("mkey", lmk).join(rk, Seq("mkey", "g"), "left_semi")
+              .drop("mkey")
+          case "unless" =>
+            lf.withColumn("mkey", lmk).join(rk, Seq("mkey", "g"), "left_anti")
+              .drop("mkey")
+          case "or" => lf.unionByName(
+            rf.withColumn("mkey", rmk)
+              .join(lf.select(lmk.as("mkey"), col("g")).distinct(),
+                Seq("mkey", "g"), "left_anti")
+              .drop("mkey"))
+        }
+      case TopK(fn, k, inner, by, without) =>
+        topk(ev(inner), fn, k, by, without, onePoint = g0 == g1)
+      case LimitAgg(fn, p, inner, by, without) =>
+        limitAgg(ev(inner), fn, p, by, without, onePoint = g0 == g1)
+      case HistQuantile(q, inner) =>
+        PromOps.histogramQuantile(ev(inner), q, extraKeys = Seq("g"))
+      case HistFraction(lo, hi, inner) =>
+        PromOps.histogramFraction(ev(inner), lo, hi, extraKeys = Seq("g"))
+      case LabelJoin(inner, dst, sep, srcs) =>
+        val labels = PromOps.labelsOf(col("skey"))
+        val joined = concat_ws(sep,
+          srcs.map(s => coalesce(labels.getItem(s), lit(""))): _*)
+        ev(inner)
+          .withColumn("skey", PromOps.seriesKey(setLabel(labels, dst, joined)))
+      case LabelReplace(inner, dst, repl, src, regex) =>
+        val labels = PromOps.labelsOf(col("skey"))
+        val anchored = "^(?:" + regex + ")$"
+        val srcVal = coalesce(labels.getItem(src), lit("")) // missing matches ""
+        val newKey = when(srcVal.rlike(anchored),
+          PromOps.seriesKey(setLabel(labels, dst,
+            regexp_replace(srcVal, anchored, repl))))
+          .otherwise(col("skey")) // no match: series unchanged
+        ev(inner).withColumn("skey", newKey)
+      case NumLit(v) => // literal heading an arithmetic chain: one {} row
+        gridFrame(metrics, g0, g1, stepSec)
+          .withColumn("value", lit(v).cast("double"))
+      case VectorLit(v) =>
+        gridFrame(metrics, g0, g1, stepSec)
+          .withColumn("value", lit(v).cast("double"))
+      case TimeFn() => // time() on a grid is the grid point itself
+        gridFrame(metrics, g0, g1, stepSec)
+          .withColumn("value", col("g").cast("double"))
+      case ScalarFn(inner) =>
+        // exactly-one-series -> its value; otherwise NaN (Prometheus) —
+        // including points where the inner vector is EMPTY
+        countPerPoint(metrics, ev(inner), g0, g1, stepSec)
+          .select(lit("{}").as("skey"), col("g"),
+            when(col("n") === 1, col("v"))
+              .otherwise(lit(Double.NaN)).as("value"))
+      case Absent(sel) =>
+        // alerting primitive: 1.0 at each point where no series matched.
+        // The output labels are derived from the selector's EQUALITY
+        // matchers (they are what alert routing keys on), as Prometheus
+        // does.
+        absent(countPerPoint(metrics, ev(sel), g0, g1, stepSec), sel)
+      case AbsentOT(sel, w) =>
+        // 1 iff the RANGE is empty: no sample from any matching series —
+        // absent() of present_over_time over the same window
+        absent(countPerPoint(metrics, ev(OverTime("present", sel, w)), g0,
+          g1, stepSec), sel)
+      case other => // only the parser's private placeholder node
+        throw new IllegalArgumentException(s"not an evaluable expr: $other")
+    }
   }
+
+  /** `fn_over_time` over per-point window samples (skey, g, e, value). */
+  private def overTime(fn: String)(samples: DataFrame): DataFrame =
+    samples.groupBy(col("skey"), col("g"))
+      .agg(overTimeAgg(fn, col("e")).as("value"))
+
+  /** The rate family over per-point window samples: resets/changes count
+    * adjacent pairs; rate/increase/delta extrapolate to the window
+    * (g − w, g]; irate/idelta read the last two samples.
+    */
+  private def rateFamily(kind: String, w: Long)(samples: DataFrame): DataFrame =
+    if (kind == "resets" || kind == "changes")
+      PromOps.resetsFromSamples(samples, kind, extraKeys = Seq("g"))
+    else PromOps.rateFromSamples(samples, kind, col("g") - w, col("g"), w,
+      extraKeys = Seq("g"))
+
+  /** deriv/predict_linear over per-point window samples; sample times
+    * are centered on each window's own start g − w.
+    */
+  private def deriv(w: Long, predict: Option[Double])(
+      samples: DataFrame): DataFrame =
+    PromOps.derivFromSamples(samples, col("g") - w, w, predict,
+      extraKeys = Seq("g"))
 
   /** Subquery points exploded to the outer grid — range evaluation of
     * `fn((expr)[w:s])`: the inner expression evaluates ONCE on its own
@@ -1197,35 +851,89 @@ object PromEval {
     * [[PromOps.rangeEval]] uses, applied to evaluated values instead of
     * raw samples. Cost is linear in inner points × (w/step) fan-out;
     * nothing is re-evaluated per outer point, and the shuffle key gains
-    * og so a hot series spreads across reducers.
+    * og so a hot series spreads across reducers. Output has the window
+    * samples' shape (skey, g = og, e = ig, value).
     */
   private def subqueryPoints(metrics: DataFrame, inner: Expr, w: Long,
       sstep: Long, g0: Long, g1: Long, stepSec: Long,
       lookbackSec: Long): DataFrame = {
     val ig1 = (g1 / sstep) * sstep
-    val ig0 = ((g0 - w) / sstep + 1) * sstep
-    evalGrid(metrics, inner, ig0, ig1, sstep, lookbackSec)
-      .withColumn("lo", greatest(lit(g0),
-        expr(s"((g + ${stepSec - 1}) div $stepSec) * $stepSec")))
-      .withColumn("hi", least(lit(g1),
-        expr(s"((g + ${w - 1}) div $stepSec) * $stepSec")))
-      .filter(col("lo") <= col("hi"))
-      .select(col("skey"), col("g").as("ig"), col("value"),
-        explode(sequence(col("lo"), col("hi"), lit(stepSec))).as("og"))
+    val ig0 = ((g0 - w) / sstep + 1) * sstep // first aligned point > g0-w
+    PromOps.toGridPoints(
+      evalGridResolved(metrics, inner, ig0, ig1, sstep, lookbackSec),
+      Seq(col("skey"), col("g").as("e"), col("value")), "g", g0, g1,
+      stepSec, w)
+  }
+
+  /** The `@` timestamp that pins an expression itself: a selector's, a
+    * subquery rebase's, or that of the one selector a range function
+    * reads.
+    */
+  private object Pinned {
+    def unapply(e: Expr): Option[Long] = e match {
+      case s: Selector => s.atSec
+      case ts: TimeShift => ts.atSec
+      case OverTime(_, s, _) => s.atSec
+      case Rate(_, s, _) => s.atSec
+      case Deriv(s, _, _) => s.atSec
+      case QuantileOverTime(_, s, _) => s.atSec
+      case MadOverTime(s, _) => s.atSec
+      case HoltWinters(s, _, _, _) => s.atSec
+      case TimestampFn(s) => s.atSec
+      case _ => None
+    }
+  }
+
+  /** `e` with the pin [[Pinned]] found removed (inner pins stay). */
+  private def unpin(e: Expr): Expr = e match {
+    case ts: TimeShift => ts.copy(atSec = None)
+    case _ => mapSelectors(e)(_.copy(atSec = None))
   }
 
   /** An `@`-pinned expression on a grid: the @ timestamp replaces "now"
     * entirely (offset then applies relative to it), so the value is
-    * CONSTANT across the grid — evaluate the instant form once and pair
-    * every series with every aligned point via a broadcast of the tiny
-    * grid frame (|grid| rows). This is Prometheus's range-query
-    * semantics for @: each step evaluates at the same pinned instant.
+    * CONSTANT across the grid — evaluate the unpinned expression once on
+    * the one-point grid at the pinned instant and pair every series with
+    * every aligned point via a broadcast of the tiny grid frame (|grid|
+    * rows). This is Prometheus's range-query semantics for @: each step
+    * evaluates at the same pinned instant. A one-point grid needs no
+    * pairing: its point is the pinned one relabelled.
     */
-  private def pinnedGrid(metrics: DataFrame, expr: Expr, g0: Long, g1: Long,
-      stepSec: Long, lookbackSec: Long): DataFrame =
-    evalInstant(metrics, expr, g1, lookbackSec)
+  private def pinnedGrid(metrics: DataFrame, unpinned: Expr, at: Long,
+      g0: Long, g1: Long, stepSec: Long, lookbackSec: Long): DataFrame = {
+    val once = evalGridResolved(metrics, unpinned, at, at, 1L, lookbackSec)
+    if (g0 == g1)
+      once.select(col("skey"), (col("g") + (g0 - at)).as("g"), col("value"))
+    else once.select(col("skey"), col("value"))
       .crossJoin(broadcast(gridFrame(metrics, g0, g1, stepSec).select(col("g"))))
       .select(col("skey"), col("g"), col("value"))
+  }
+
+  /** Per grid point: the row count `n` of `rows` and its least value `v`,
+    * with EVERY point present — the dense grid unions in as zero-count
+    * rows, so a point where `rows` is empty comes out with n = 0 from the
+    * same single aggregation on g. A one-point grid needs no union: a
+    * global aggregate yields its one row even over no input, and the
+    * optimizer can still drop an aggregate beneath it that a
+    * row-count-only plan does not need.
+    */
+  private def countPerPoint(metrics: DataFrame, rows: DataFrame, g0: Long,
+      g1: Long, stepSec: Long): DataFrame =
+    if (g0 == g1)
+      rows.agg(count(lit(1)).as("n"), min(col("value")).as("v"))
+        .select(lit(g0).as("g"), col("n"), col("v"))
+    else rows.select(col("g"), col("value"), lit(1L).as("n"))
+      .unionByName(gridFrame(metrics, g0, g1, stepSec).select(col("g"),
+        lit(null).cast("double").as("value"), lit(0L).as("n")))
+      .groupBy(col("g"))
+      .agg(sum(col("n")).as("n"), min(col("value")).as("v"))
+
+  /** absent()/absent_over_time(): 1.0 at the points where `counted`
+    * (from [[countPerPoint]]) saw no series.
+    */
+  private def absent(counted: DataFrame, sel: Selector): DataFrame =
+    counted.filter(col("n") === 0)
+      .select(lit(absentKey(sel)).as("skey"), col("g"), lit(1.0).as("value"))
 
   /** absent()/absent_over_time() output labels: the selector's equality
     * matchers as a canonical series key (sorted by label, same JSON shape
@@ -1246,12 +954,14 @@ object PromEval {
   }
 
   /** One (skey='{}', g) row per aligned grid point — the dense backbone
-    * for scalar-typed grid expressions. |grid| rows total: tiny.
+    * for scalar-typed grid expressions. |grid| rows total: tiny. The
+    * points are offsets from g0, so the range itself depends only on the
+    * grid's size: a refresh at the next time reuses its generated code.
     */
   private def gridFrame(metrics: DataFrame, g0: Long, g1: Long,
       stepSec: Long): DataFrame =
-    metrics.sparkSession.range(g0, g1 + 1, stepSec)
-      .select(lit("{}").as("skey"), col("id").as("g"))
+    metrics.sparkSession.range((g1 - g0) / stepSec + 1)
+      .select(lit("{}").as("skey"), (lit(g0) + col("id") * stepSec).as("g"))
 
   /** Label matchers: equality filters push into the scan; the result keeps
     * only matching series. Regex matchers are fully anchored and treat a
@@ -1276,9 +986,6 @@ object PromEval {
       df.filter(!anchored(l, rx))
     }
   }
-
-  private def applyMatchers(iv: DataFrame): DataFrame =
-    iv.select(col("skey"), col("value"))
 
   private def arith(value: Column, op: String, v: Double): Column = op match {
     case "*" => value * v
@@ -1324,14 +1031,15 @@ object PromEval {
     case other => aggColumn(other)
   }
 
+  /** `fn by/without (...)` per grid point. */
   private def regroup(df: DataFrame, fn: String, by: Seq[String],
-      without: Seq[String], extraKeys: Seq[String]): DataFrame =
+      without: Seq[String]): DataFrame =
     (by, without) match {
       case (Nil, Nil) =>
         // aggregate everything into a single (label-less) series
-        PromOps.aggBy(df, Nil, aggColumn(fn), extraKeys)
-      case (b, Nil) => PromOps.aggBy(df, b, aggColumn(fn), extraKeys)
-      case (Nil, w) => PromOps.aggWithout(df, w, aggColumn(fn), extraKeys)
+        PromOps.aggBy(df, Nil, aggColumn(fn), Seq("g"))
+      case (b, Nil) => PromOps.aggBy(df, b, aggColumn(fn), Seq("g"))
+      case (Nil, w) => PromOps.aggWithout(df, w, aggColumn(fn), Seq("g"))
       case _ => throw new IllegalArgumentException("both by and without given")
     }
 }

@@ -132,41 +132,33 @@ object PromOps {
       g0: Long,
       g1: Long,
       stepSec: Long,
-      lookbackSec: Long = DefaultLookbackSec): DataFrame = {
-    require(g0 % stepSec == 0 && g1 % stepSec == 0 && g1 >= g0,
-      s"grid must be step-aligned: [$g0, $g1] step $stepSec")
-    withEpoch(withSeriesKey(metrics))
-      .filter(col("metric_name") === metricName)
-      .filter(col("e") > g0 - lookbackSec && col("e") <= g1)
-      // canonical key BEFORE the explode (the fact frame precomputes it;
-      // the fallback derives it here): the JSON construction is the one
-      // non-codegen expression, paid once per sample, not per grid point
-      // first grid point this sample is visible at (ceil-align), clamped;
-      // integer `div` keeps the whole expression in codegen'd long math
-      .withColumn("gs", greatest(lit(g0),
-        expr(s"((e + ${stepSec - 1}) div $stepSec) * $stepSec")))
-      // last grid point still inside the HALF-OPEN staleness window
-      // (g - lookback < e ⟺ g ≤ e + lookback - 1), clamped
-      .withColumn("ge", least(lit(g1),
-        expr(s"((e + ${lookbackSec - 1}) div $stepSec) * $stepSec")))
-      .filter(col("gs") <= col("ge"))
-      .select(col("skey"), col("e"), col("value"),
-        explode(sequence(col("gs"), col("ge"), lit(stepSec))).as("g"))
+      lookbackSec: Long = DefaultLookbackSec): DataFrame =
+    latestAtGrid(metrics, metricName, g0, g1, stepSec, lookbackSec)
+      .select(col("skey"), col("g"), col("value"))
+
+  /** [[rangeEval]] keeping the visible sample's own epoch second:
+    * (skey, g, e, value) — what `timestamp()` reads.
+    */
+  def latestAtGrid(
+      metrics: DataFrame,
+      metricName: String,
+      g0: Long,
+      g1: Long,
+      stepSec: Long,
+      lookbackSec: Long): DataFrame =
+    samplesAtGrid(metrics, metricName, g0, g1, stepSec, lookbackSec)
       .groupBy(col("skey"), col("g"))
       // flat-buffer latest (see instantVector): hash aggregate, no sort
       .agg(graft.functions.LatestSample.latest(col("e"), col("value"))
         .as("last"))
-      .select(col("skey"), col("g"), col("last.value").as("value"))
-  }
+      .select(col("skey"), col("g"), col("last.e").as("e"),
+        col("last.value").as("value"))
 
   /** Moving-window expansion for `fn_over_time(sel[w])` evaluated at
     * every step-aligned grid point in [g0, g1] — the Grafana panel
-    * shape. A sample at `e` is inside the (g−w, g] window of the grid
-    * points g with e ≤ g < e+w, so each sample explodes into at most
-    * ⌈w/step⌉ (skey, g) rows: linear in samples × window/step, never a
-    * cross join, and the JSON series key is built once per sample
-    * before the explode. Output: (skey, g, e, value) for the enclosing
-    * evaluator to aggregate per (skey, g).
+    * shape: each sample paired with the points whose window (g−w, g]
+    * holds it. Output: (skey, e, value, g) for the enclosing evaluator
+    * to aggregate per (skey, g).
     */
   def windowGrid(
       metrics: DataFrame,
@@ -174,79 +166,54 @@ object PromOps {
       g0: Long,
       g1: Long,
       stepSec: Long,
-      windowSec: Long): DataFrame = {
+      windowSec: Long): DataFrame =
+    samplesAtGrid(metrics, metricName, g0, g1, stepSec, windowSec)
+
+  /** Each sample (skey, e, value) of `metricName` paired with every
+    * step-aligned grid point g in [g0, g1] whose half-open span
+    * (g − span, g] holds it — the points e ≤ g < e + span, at most
+    * ⌈span/step⌉ of them: linear in samples × span/step, never a cross
+    * join. The staleness lookback ([[rangeEval]]) and a range window
+    * ([[windowGrid]]) are both such a span. Output: (skey, e, value, g).
+    */
+  private def samplesAtGrid(metrics: DataFrame, metricName: String,
+      g0: Long, g1: Long, stepSec: Long, spanSec: Long): DataFrame = {
     require(g0 % stepSec == 0 && g1 % stepSec == 0 && g1 >= g0,
       s"grid must be step-aligned: [$g0, $g1] step $stepSec")
-    withEpoch(withSeriesKey(metrics))
+    // canonical key BEFORE the explode (the fact frame precomputes it;
+    // the fallback derives it here): the JSON construction is the one
+    // non-codegen expression, paid once per sample, not per grid point
+    val inRange = withEpoch(withSeriesKey(metrics))
       .filter(col("metric_name") === metricName)
-      .filter(col("e") > g0 - windowSec && col("e") <= g1)
-      // first aligned g ≥ e, clamped to the grid
-      .withColumn("gs", greatest(lit(g0),
-        expr(s"((e + ${stepSec - 1}) div $stepSec) * $stepSec")))
-      // last aligned g < e + w (window is left-exclusive), clamped
-      .withColumn("ge", least(lit(g1),
-        expr(s"((e + ${windowSec - 1}) div $stepSec) * $stepSec")))
-      .filter(col("gs") <= col("ge"))
-      .select(col("skey"), col("e"), col("value"),
-        explode(sequence(col("gs"), col("ge"), lit(stepSec))).as("g"))
+      .filter(col("e") > g0 - spanSec && col("e") <= g1)
+    toGridPoints(inRange, Seq(col("skey"), col("e"), col("value")), "e",
+      g0, g1, stepSec, spanSec)
   }
 
-  /** The full Rate family at every grid point — `rate`/`increase`/
-    * `delta`/`irate`/`idelta`/`resets`/`changes`: the [[windowGrid]]
-    * expansion keyed by (skey, g), then the same formulas as the
-    * instant path ([[rateOverRange]]/[[resetsOverRange]]). One window
-    * pass partitioned by (skey, g), satisfied in place by the fact
-    * frame's skey-sharded layout (no exchange; see the class note on
-    * the hot-series tradeoff).
+  /** `cols` of each row paired, as `g`, with every aligned point g in
+    * [g0, g1] whose span (g − span, g] holds the row's time column `t` —
+    * the points t ≤ g < t + span. Every row must already lie in
+    * (g0 − span, g1]. On a one-point grid each row then reaches exactly
+    * that point, so g is g0 — written greatest(g0, t), which leaves no
+    * literal for the optimizer to fold into later operators (it would
+    * be compiled into their code anew at every evaluation time).
     */
-  def rateOverGrid(metrics: DataFrame, metricName: String, g0: Long,
-      g1: Long, stepSec: Long, windowSec: Long, kind: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wg = windowGrid(metrics, metricName, g0, g1, stepSec, windowSec)
-      .select(col("skey"), col("g"), col("e"),
-        col("value").cast("decimal(20,6)").as("vd"))
-    if (kind == "irate" || kind == "idelta") {
-      // instant family per grid point: the last two DISTINCT-TIMESTAMP
-      // samples of each window — timestamp collisions collapse to their
-      // max-value sample first, exactly as the instant path does
-      // (ADVICE r5: a collision at the window tail must pair with the
-      // most recent earlier timestamp, not drop the grid point)
-      val dedup = wg.groupBy(col("skey"), col("g"), col("e"))
-        .agg(max(col("vd")).as("vd"))
-      val byDesc = Window.partitionBy(col("skey"), col("g"))
-        .orderBy(col("e").desc)
-      val agg = dedup.withColumn("rn", row_number().over(byDesc))
-        .filter(col("rn") <= 2)
-        .groupBy(col("skey"), col("g"))
-        .agg(max(when(col("rn") === 1, struct(col("e"), col("vd")))).as("lastS"),
-          max(when(col("rn") === 2, struct(col("e"), col("vd")))).as("prevS"))
-        .filter(col("prevS").isNotNull) // e's are distinct by construction
-      val value =
-        if (kind == "idelta") (col("lastS.vd") - col("prevS.vd")).cast("double")
-        else when(col("lastS.vd") >= col("prevS.vd"),
-          col("lastS.vd") - col("prevS.vd")).otherwise(col("lastS.vd"))
-          .cast("double") / (col("lastS.e") - col("prevS.e"))
-      return agg.select(col("skey"), col("g"), value.as("value"))
-    }
-    if (kind == "resets" || kind == "changes") {
-      val w = Window.partitionBy(col("skey"), col("g"))
-        .orderBy(col("e"), col("vd"))
-      val flag =
-        if (kind == "resets") col("vd") < col("prev")
-        else col("vd") =!= col("prev")
-      return wg.withColumn("prev", lag(col("vd"), 1).over(w))
-        .groupBy(col("skey"), col("g"))
-        .agg(sum(when(col("prev").isNotNull && flag, 1).otherwise(0))
-          .cast("double").as("value"))
-    }
-    // rate/increase/delta at every grid point: the SAME extrapolated
-    // kernel as the instant form, with each point's window bounds
-    // (g − w, g] riding the group key — no duplicated formula
-    rateFromSamples(
-      wg.select(col("skey"), col("g"), col("e"), col("vd").as("value")),
-      kind, col("g") - windowSec, col("g"), windowSec,
-      extraKeys = Seq("g"))
-  }
+  private[promql] def toGridPoints(rows: DataFrame, cols: Seq[Column],
+      t: String, g0: Long, g1: Long, stepSec: Long,
+      spanSec: Long): DataFrame =
+    if (g0 == g1) rows.select(cols :+ greatest(lit(g0), col(t)).as("g"): _*)
+    else rows
+      // first aligned point at or after t, clamped; integer `div` keeps
+      // the whole expression in codegen'd long math
+      .withColumn("gs", greatest(lit(g0),
+        expr(s"(($t + ${stepSec - 1}) div $stepSec) * $stepSec")))
+      // last point whose HALF-OPEN span still holds t
+      // (g - span < t ⟺ g ≤ t + span - 1), clamped
+      .withColumn("ge", least(lit(g1),
+        expr(s"(($t + ${spanSec - 1}) div $stepSec) * $stepSec")))
+      .filter(col("gs") <= col("ge"))
+      .select(cols :+
+        explode(sequence(col("gs"), col("ge"), lit(stepSec))).as("g"): _*)
 
   /** PromQL range selector `x[window]` evaluated at `t`: all raw samples
     * with `t - window < ts <= t`, tagged with series identity. The
@@ -260,37 +227,6 @@ object PromOps {
     withEpoch(withSeriesKey(metrics))
       .filter(col("metric_name") === metricName)
       .filter(col("e") > atEpochSec - windowSec && col("e") <= atEpochSec)
-
-  /** `rate()` / `increase()` over a range selector — Prometheus's REAL
-    * extrapolated semantics (round 16; previously observed-span, a
-    * stated deviation now closed). Per series, counter-reset-aware
-    * deltas sum in DECIMAL(20,6) (order-independent, exact); the sum is
-    * then extrapolated to the window bounds exactly as
-    * `promql.extrapolatedRate` does it:
-    *
-    *  - extend the sampled interval toward each window edge by the
-    *    actual gap, CLAMPED at half the average sample spacing when the
-    *    gap exceeds 1.1× that average (the published heuristic for "the
-    *    series probably started/stopped inside the window");
-    *  - for counters, never extrapolate the start past the point where
-    *    the counter would have been zero
-    *    (`durationToZero = span · firstV/result`);
-    *  - rate divides the extrapolated increase by the WINDOW length,
-    *    not the observed span.
-    *
-    * Cross-engine determinism: every aggregate feeding the factor is
-    * exact (integer timestamps, decimal sums), and the factor itself is
-    * a fixed-order chain of IEEE double ops that the DuckDB oracles
-    * replay literally — the repo's mirrored-double discipline (as
-    * deriv/stdvar). Series with fewer than two distinct timestamps drop
-    * out, as in Prometheus. One window pass plus one aggregation, both
-    * on the series key the data is already shuffled by.
-    */
-  def rateOverRange(metrics: DataFrame, metricName: String, atEpochSec: Long,
-      windowSec: Long, kind: String): DataFrame =
-    rateFromSamples(
-      rangeSelector(metrics, metricName, atEpochSec, windowSec), kind,
-      lit(atEpochSec - windowSec), lit(atEpochSec), windowSec)
 
   /** The shared extrapolation factor applied to an aggregated frame
     * carrying (n, fe, le, fv, res) — sample count, first/last epoch,
@@ -325,14 +261,38 @@ object PromOps {
     else resD * factor
   }
 
-  /** The rate family over an arbitrary (skey, e, value) sample frame —
-    * shared by plain range selectors, SUBQUERY ranges (where the
-    * "samples" are the inner expression's values at the aligned grid
-    * points, `rate(expr[w:s])`), and the grid form. `rangeStart`/
-    * `rangeEnd` are the window bounds the extrapolation extends to —
-    * literal columns for instant evaluation, `g − w`/`g` at range
-    * evaluation. irate/idelta ignore them (Prometheus does not
-    * extrapolate the instant family).
+  /** The rate family over an arbitrary (skey[, extras], e, value) sample
+    * frame — a range selector's window samples, or a SUBQUERY's (where
+    * the "samples" are the inner expression's values at the aligned grid
+    * points, `rate(expr[w:s])`), keyed per grid point by `extraKeys`.
+    * `rangeStart`/`rangeEnd` are the window bounds the extrapolation
+    * extends to, `g − w`/`g` per point. irate/idelta ignore them
+    * (Prometheus does not extrapolate the instant family).
+    *
+    * `rate()` / `increase()` follow Prometheus's REAL extrapolated
+    * semantics (round 16; previously observed-span, a
+    * stated deviation now closed). Per series, counter-reset-aware
+    * deltas sum in DECIMAL(20,6) (order-independent, exact); the sum is
+    * then extrapolated to the window bounds exactly as
+    * `promql.extrapolatedRate` does it:
+    *
+    *  - extend the sampled interval toward each window edge by the
+    *    actual gap, CLAMPED at half the average sample spacing when the
+    *    gap exceeds 1.1× that average (the published heuristic for "the
+    *    series probably started/stopped inside the window");
+    *  - for counters, never extrapolate the start past the point where
+    *    the counter would have been zero
+    *    (`durationToZero = span · firstV/result`);
+    *  - rate divides the extrapolated increase by the WINDOW length,
+    *    not the observed span.
+    *
+    * Cross-engine determinism: every aggregate feeding the factor is
+    * exact (integer timestamps, decimal sums), and the factor itself is
+    * a fixed-order chain of IEEE double ops that the DuckDB oracles
+    * replay literally — the repo's mirrored-double discipline (as
+    * deriv/stdvar). Series with fewer than two distinct timestamps drop
+    * out, as in Prometheus. One window pass plus one aggregation, both
+    * on the series key the data is already shuffled by.
     */
   def rateFromSamples(samples: DataFrame, kind: String,
       rangeStart: Column, rangeEnd: Column, windowSec: Long,
@@ -420,19 +380,13 @@ object PromOps {
         .as("value"): _*)
   }
 
-  /** `resets(x[w])` / `changes(x[w])`: per series, the number of counter
+  /** `resets(x[w])` / `changes(x[w])` over an arbitrary (skey[, extras],
+    * e, value) sample frame (see [[rateFromSamples]]): per series and
+    * point, the number of counter
     * resets (value drops) / value changes between time-adjacent samples.
     * Exact integer counts — one window pass on the series partitioning,
     * one aggregation. Tie order among equal timestamps follows the
     * repo-wide (e, value) rule so both engines see the same adjacency.
-    */
-  def resetsOverRange(metrics: DataFrame, metricName: String, atEpochSec: Long,
-      windowSec: Long, kind: String): DataFrame =
-    resetsFromSamples(
-      rangeSelector(metrics, metricName, atEpochSec, windowSec), kind)
-
-  /** resets/changes over an arbitrary (skey, e, value) sample frame
-    * (see [[rateFromSamples]]).
     */
   def resetsFromSamples(samples: DataFrame, kind: String,
       extraKeys: Seq[String] = Nil): DataFrame = {
@@ -451,28 +405,18 @@ object PromOps {
         .cast("double").as("value"))
   }
 
-  /** `deriv(x[w])` / `predict_linear(x[w], t)`: per-series least-squares
-    * slope over the window, optionally extrapolated `predictSec` past
-    * the evaluation time. Cross-engine determinism: sample times are
-    * centered on the WINDOW START (a constant, so x fits in ≤ w — small
-    * exact integers), every regression sum (Σx, Σx², Σv, Σxv) is kept in
+  /** `deriv(x[w])` / `predict_linear(x[w], t)` over an arbitrary
+    * (skey[, extras], e, value) sample frame — range selectors and
+    * SUBQUERY ranges alike: per-series least-squares slope over the
+    * window, optionally extrapolated `predictSec` past the evaluation
+    * time. Cross-engine determinism: sample times are centered on the
+    * WINDOW START `x0` (g − w per point, so x fits in ≤ w — small exact
+    * integers), every regression sum (Σx, Σx², Σv, Σxv) is kept in
     * exact DECIMAL, and only the final slope division and the predict
     * affine step run in doubles, in an operation order the oracle
     * mirrors literally. One map-side-combinable aggregation per series —
     * no window pass, no second shuffle. Exactness bound: the scaled
     * Σxv term stays below 10³² for any n·w·|v| a real window holds.
-    */
-  def derivOverRange(metrics: DataFrame, metricName: String, atEpochSec: Long,
-      windowSec: Long, predictSec: Option[Double]): DataFrame =
-    derivFromSamples(rangeSelector(metrics, metricName, atEpochSec, windowSec),
-      lit(atEpochSec - windowSec), windowSec, predictSec)
-
-  /** deriv/predict_linear over an arbitrary (skey[, extras], e, value)
-    * sample frame — shared by plain range selectors and SUBQUERY ranges.
-    * `x0` is the window-start column the sample times are centered on
-    * (a constant for the instant form, g − w at range evaluation); the
-    * decimal-sum regression and the mirrored double affine step are
-    * documented on the instant form above.
     */
   def derivFromSamples(samples: DataFrame, x0: Column, windowSec: Long,
       predictSec: Option[Double], extraKeys: Seq[String] = Nil): DataFrame = {
@@ -505,43 +449,9 @@ object PromOps {
     }
   }
 
-  /** `deriv`/`predict_linear` at every grid point: the per-window
-    * least-squares slope with sample times centered on each window's
-    * own start (x = e − (g − w), small exact integers), the same
-    * decimal-sum regression as [[derivOverRange]] keyed by (skey, g).
-    * One map-side-combinable aggregation, no window pass.
-    */
-  def derivOverGrid(metrics: DataFrame, metricName: String, g0: Long,
-      g1: Long, stepSec: Long, windowSec: Long,
-      predictSec: Option[Double]): DataFrame = {
-    val wg = windowGrid(metrics, metricName, g0, g1, stepSec, windowSec)
-      .select(col("skey"), col("g"),
-        (col("e") - (col("g") - windowSec)).as("x"),
-        col("value").cast("decimal(20,6)").as("vd"))
-    val agg = wg.groupBy(col("skey"), col("g")).agg(
-      count(lit(1)).as("n"),
-      sum(col("x").cast("decimal(38,0)")).as("sx"),
-      sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"),
-      sum(col("vd")).as("sv"),
-      sum(col("vd") * col("x")).as("sxv"))
-    val num = (col("n") * col("sxv") - col("sx") * col("sv")).cast("double")
-    val den = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-    val withSlope = agg
-      .filter(col("n") * col("sxx") - col("sx") * col("sx") > 0)
-      .withColumn("slope", num / den)
-    predictSec match {
-      case None =>
-        withSlope.select(col("skey"), col("g"), col("slope").as("value"))
-      case Some(d) =>
-        val intercept =
-          (col("sv").cast("double") - col("slope") * col("sx").cast("double")) /
-            col("n")
-        withSlope.select(col("skey"), col("g"),
-          (intercept + col("slope") * lit(windowSec + d)).as("value"))
-    }
-  }
-
-  /** `holt_winters(x[w], sf, tf)`: double exponential smoothing over each
+  /** `holt_winters(x[w], sf, tf)` over an arbitrary (skey[, extras], e,
+    * value) sample frame — a range selector's window samples or a
+    * SUBQUERY's inner points: double exponential smoothing over each
     * series' time-ordered window samples — Prometheus's algorithm
     * verbatim (level s, trend b; b seeds from the first two samples, the
     * trend blend starts on the second step). The recursion is inherently
@@ -552,29 +462,6 @@ object PromOps {
     * expressions. Doubles are deterministic here BECAUSE the fold order
     * is total: the oracle replays the identical recursion as a recursive
     * CTE, same IEEE ops in the same order.
-    */
-  def holtWinters(metrics: DataFrame, metricName: String, atEpochSec: Long,
-      windowSec: Long, sf: Double, tf: Double): DataFrame =
-    holtWintersOver(rangeSelector(metrics, metricName, atEpochSec, windowSec),
-      Seq(col("skey")), sf, tf)
-      .select(col("skey"), col("value"))
-
-  /** holt_winters at every grid point: the [[windowGrid]] expansion keyed
-    * by (skey, g), then the same total-order fold per window — the g in
-    * the shuffle key spreads a hot series across reducers, as for the
-    * rest of the over-time family.
-    */
-  def holtWintersGrid(metrics: DataFrame, metricName: String, g0: Long,
-      g1: Long, stepSec: Long, windowSec: Long, sf: Double,
-      tf: Double): DataFrame =
-    holtWintersOver(windowGrid(metrics, metricName, g0, g1, stepSec, windowSec),
-      Seq(col("skey"), col("g")), sf, tf)
-      .select(col("skey"), col("g"), col("value"))
-
-  /** holt_winters over an arbitrary (skey[, extras], e, value) sample
-    * frame — the SUBQUERY form, where the samples are the inner
-    * expression's values at aligned grid points (see
-    * [[rateFromSamples]]); same total-order fold.
     */
   def holtWintersFromSamples(samples: DataFrame, sf: Double, tf: Double,
       extraKeys: Seq[String] = Nil): DataFrame = {

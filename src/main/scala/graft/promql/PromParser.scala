@@ -84,7 +84,7 @@ object PromParser {
   final case class OverTime(fn: String, sel: Selector, windowSec: Long) extends Expr
   /** `rate(sel[w])` / `increase(sel[w])` — counter-reset-aware with
     * Prometheus's boundary extrapolation, exactly (see
-    * [[graft.promql.PromOps.rateOverRange]]; a stated addition beyond
+    * [[graft.promql.PromOps.rateFromSamples]]; a stated addition beyond
     * the reference's shipped surface).
     */
   final case class Rate(kind: String, sel: Selector, windowSec: Long) extends Expr

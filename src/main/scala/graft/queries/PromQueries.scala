@@ -263,7 +263,7 @@ object PromQueries {
 
   /** Range-evaluated `rate(purchase[720h])` on the 5-minute grid — the
     * canonical Grafana counter panel, through the parsed range path
-    * (PromEval.evalGrid → PromOps.rateOverGrid). The full-fixture window
+    * (PromEval.evalGrid → PromOps.rateFromSamples). The full-fixture window
     * keeps every (series, point) non-vacuous; deltas sum in
     * DECIMAL(20,6) (order-independent) and the extrapolation factor —
     * each point's window bounds are (g−w, g] — is the fixed-order
@@ -658,7 +658,7 @@ object PromQueries {
       "FROM s GROUP BY u, k"
 
   /** Parsed `rate(purchase[720h])` — the text front-end driving
-    * [[PromOps.rateOverRange]]. The window spans the whole fixture range
+    * [[PromOps.rateFromSamples]]. The window spans the whole fixture range
     * (2024-01-01 → Te) so per-(user, k) raw series have ≥2 samples at
     * every scale factor and the entry is non-vacuous — round-3 review
     * caught the earlier 24h+matcher variant passing on the empty set.
@@ -1346,7 +1346,7 @@ object PromQueries {
   /** Parsed `deriv(view[720h])` — per-series least-squares slope. The
     * regression sums are exact decimals over window-start-centered times
     * in BOTH engines; only the final division is a double, in mirrored
-    * operation order (see [[graft.promql.PromOps.derivOverRange]]).
+    * operation order (see [[graft.promql.PromOps.derivFromSamples]]).
     */
   def parsedDeriv(spark: SparkSession, sfDir: String): DataFrame = {
     val expr = graft.promql.PromParser.parse("deriv(view[720h])")
@@ -1935,9 +1935,9 @@ object PromQueries {
 
   /** Range-evaluated `holt_winters(purchase[168h], 0.3, 0.5)` on the
     * 5-minute grid — the smoothed dashboard panel through the parsed
-    * range path (PromEval.evalGrid → PromOps.holtWintersGrid): the
-    * windowGrid explode keyed by (series, point), then the same
-    * total-order fold as the instant form. The recursion is
+    * range path (PromEval.evalGrid → PromOps.holtWintersFromSamples):
+    * the windowGrid explode keyed by (series, point), then the
+    * total-order fold per (series, point). The recursion is
     * IEEE-deterministic because the fold order is total; the oracle
     * replays it per (series, point) as a recursive CTE.
     */

@@ -34,4 +34,11 @@ class BenchActionSpec extends SparkSpec {
       graft.ext.CacheScope.drain()
     }
   }
+
+  test("only an sf0.1 run writes BENCH_FULL.json; other scale factors get their own file") {
+    assert(Bench.fullRecordFile("testdata/sf0.1") == "BENCH_FULL.json")
+    assert(Bench.fullRecordFile("testdata/sf0.1/") == "BENCH_FULL.json")
+    assert(Bench.fullRecordFile("testdata/sf0.001") == "BENCH_FULL.sf0.001.json")
+    assert(Bench.fullRecordFile("sf0.01") == "BENCH_FULL.sf0.01.json")
+  }
 }

@@ -12,7 +12,9 @@ import graft.promql.PromParser._
   * (literal on either side), one-to-one vector arithmetic and
   * comparisons, many-to-one `group_left`/`group_right` arithmetic, and
   * the two-tier set operators (including heterogeneous-keyset bare
-  * `or`), all with and without `on`/`ignoring` — are rendered MINIMALLY
+  * `or`), all with and without `on`/`ignoring`, plus `quantile`,
+  * `count_values`, `label_join`/`label_replace`, `timestamp` and
+  * `absent`/`absent_over_time` with offsets — are rendered MINIMALLY
   * parenthesized
   * (so the text round-trips through the real precedence table, the
   * exact surface the round-16 set-tier bug lived in), parsed, evaluated
@@ -279,8 +281,70 @@ class PromDifferentialSpec extends SparkSpec {
         case "unless" => lv.filterNot { case (lbls, _) => rk.contains(proj(lbls, on, ig)) }
         case "or" => lv ++ rv.filterNot { case (lbls, _) => lk.contains(proj(lbls, on, ig)) }
       }
+    case AggQuantile(q, inner, by, without) =>
+      // Prometheus's interpolated rank over the group's sorted values:
+      // rank = q·(n−1), lo/hi the neighbouring order statistics — the
+      // same IEEE ops in the same order as the engine's rank arithmetic
+      naiveAt(inner, at).groupBy { case (l, _) => keepOf(by, without)(l) }
+        .map { case (l, rows) =>
+          val vs = rows.map(_._2).sorted
+          val rank = q * (vs.size - 1).toDouble
+          val lo = vs(math.floor(rank).toInt)
+          val hi = vs(math.ceil(rank).toInt)
+          (l, lo + (hi - lo) * (rank - math.floor(rank)))
+        }.toSeq
+    case CountValues(lbl, inner, by, without) =>
+      // one series per (group, value): integers print without a point
+      def fmt(v: Double): String =
+        if (v == math.floor(v) && math.abs(v) < 1e15) v.toLong.toString
+        else v.toString
+      naiveAt(inner, at)
+        .groupBy { case (l, v) => keepOf(by, without)(l) - lbl + (lbl -> fmt(v)) }
+        .map { case (l, rows) => (l, rows.size.toDouble) }.toSeq
+    case LabelJoin(inner, dst, sep, srcs) =>
+      // dst := the src values joined by sep (missing = ""); an empty
+      // result removes dst
+      naiveAt(inner, at).map { case (l, v) =>
+        (setLabel(l, dst, srcs.map(l.getOrElse(_, "")).mkString(sep)), v)
+      }
+    case LabelReplace(inner, dst, repl, src, regex) =>
+      // fully anchored match on src (missing = ""): dst := the expanded
+      // replacement; no match leaves the series unchanged
+      val anchored = s"^(?:$regex)$$"
+      naiveAt(inner, at).map { case (l, v) =>
+        val sv = l.getOrElse(src, "")
+        if (sv.matches(anchored)) (setLabel(l, dst, sv.replaceAll(anchored, repl)), v)
+        else (l, v)
+      }
+    case TimestampFn(s) =>
+      // the visible sample's own timestamp, under the same offset/@ rule
+      val ea = s.atSec.getOrElse(at) - s.offsetSec
+      naiveSelector(s, ea - Lookback, ea)
+        .groupBy(_._1)
+        .map { case (lbls, ss) =>
+          (lbls, lastSample(ss.map(t => (t._2, t._3)))._1.toDouble)
+        }.toSeq
+    case Absent(s) =>
+      // one series labelled by the equality matchers iff nothing is
+      // visible
+      if (naiveAt(s, at).isEmpty) Seq(s.eq.toMap -> 1.0) else Nil
+    case AbsentOT(s, w) =>
+      val ea = s.atSec.getOrElse(at) - s.offsetSec
+      if (naiveSelector(s, ea - w, ea).isEmpty) Seq(s.eq.toMap -> 1.0) else Nil
     case other => fail(s"naive evaluator: unexpected node $other")
   }
+
+  /** The by/without group labels of a series (both empty: none). */
+  private def keepOf(by: Seq[String], without: Seq[String])(
+      l: Map[String, String]): Map[String, String] =
+    if (by.nonEmpty) l.filter { case (k, _) => by.contains(k) }
+    else if (without.nonEmpty) l.filterNot { case (k, _) => without.contains(k) }
+    else Map.empty
+
+  /** Set a label; an empty value removes it (label_join/label_replace). */
+  private def setLabel(l: Map[String, String], k: String,
+      v: String): Map[String, String] =
+    if (v.isEmpty) l - k else l + (k -> v)
 
   // ---- minimal-paren renderer -----------------------------------------
   private def opPrec(op: String): Int = op match {
@@ -307,6 +371,13 @@ class PromDifferentialSpec extends SparkSpec {
       .getOrElse("")
 
   private def num(v: Double): String = v.toLong.toString
+
+  private def grp(by: Seq[String], without: Seq[String]): String =
+    if (by.nonEmpty) s" by (${by.mkString(", ")}) "
+    else if (without.nonEmpty) s" without (${without.mkString(", ")}) "
+    else ""
+
+  private def str(s: String): String = "\"" + s + "\""
 
   /** Parenthesize only when the child binds LOOSER than the context
     * demands — the rendered text then round-trips through the real
@@ -354,6 +425,17 @@ class PromDifferentialSpec extends SparkSpec {
           else ""
         s"$fn$cl(${render(inner, 0)})"
       case UnaryFn(fn, inner) => s"$fn(${render(inner, 0)})"
+      case AggQuantile(q, inner, by, without) =>
+        s"quantile${grp(by, without)}($q, ${render(inner, 0)})"
+      case CountValues(lbl, inner, by, without) =>
+        s"count_values${grp(by, without)}(${str(lbl)}, ${render(inner, 0)})"
+      case LabelJoin(inner, dst, sep, srcs) =>
+        s"label_join(${render(inner, 0)}, ${(dst +: sep +: srcs).map(str).mkString(", ")})"
+      case LabelReplace(inner, dst, repl, src, regex) =>
+        s"label_replace(${render(inner, 0)}, ${Seq(dst, repl, src, regex).map(str).mkString(", ")})"
+      case TimestampFn(s) => s"timestamp(${selBase(s)}${selMods(s)})"
+      case Absent(s) => s"absent(${selBase(s)}${selMods(s)})"
+      case AbsentOT(s, w) => s"absent_over_time(${selBase(s)}[${w}s]${selMods(s)})"
       case Arith(inner, op, v) => s"${render(inner, p)} $op ${num(v)}"
       case BoolCmp(inner, op, v) => s"${render(inner, p)} $op bool ${num(v)}"
       case FilterCmp(inner, op, v) => s"${render(inner, p)} $op ${num(v)}"
@@ -380,7 +462,42 @@ class PromDifferentialSpec extends SparkSpec {
 
   private def genVec(rnd: scala.util.Random, depth: Int): (Expr, Set[String]) =
     if (depth <= 0) genLeaf(rnd)
-    else rnd.nextInt(14) match {
+    else rnd.nextInt(18) match {
+      case 14 => // quantile across series, bare or per group
+        val (inner, ks0) = genVec(rnd, depth - 1)
+        val q = pick(rnd, Seq(0.0, 0.25, 0.5, 0.9, 1.0))
+        val (by, without) = genGrouping(rnd)
+        (AggQuantile(q, inner, by, without), groupKeys(ks0, by, without))
+      case 15 => // count_values: a fresh label, or one that overwrites k
+        val (inner, ks0) = genVec(rnd, depth - 1)
+        val lbl = pick(rnd, Seq("v", "k"))
+        val (by, without) = genGrouping(rnd)
+        (CountValues(lbl, inner, by, without),
+          groupKeys(ks0, by, without) + lbl)
+      case 16 => // label_join / label_replace into the fresh label j, so
+        // no two series can collapse onto one label set
+        val (inner, ks0) = genVec(rnd, depth - 1)
+        if (rnd.nextBoolean()) {
+          val srcs = pick(rnd, Seq(Seq("user"), Seq("k"), Seq("user", "k"),
+            Seq("cl", "k")))
+          val sep = pick(rnd, Seq("-", ""))
+          val empty = !srcs.exists(ks0) && (srcs.size == 1 || sep.isEmpty)
+          (LabelJoin(inner, "j", sep, srcs), if (empty) ks0 else ks0 + "j")
+        } else {
+          val (repl, src, regex) = pick(rnd, Seq(("$1", "user", "u([0-9])"),
+            ("x$1", "k", "k(a)"), ("", "cl", "c.*"), ("$1", "none", "(.*)")))
+          (LabelReplace(inner, "j", repl, src, regex), ks0 + "j")
+        }
+      case 17 => // absent / absent_over_time, with an offset 1-in-2
+        val eq = pick(rnd, Seq(Nil, Seq("user" -> "u3"), Seq("user" -> "u9"),
+          Seq("k" -> "kb")))
+        val sel = Selector(pick(rnd, Seq("m0", "m1", "m2")), eq = eq,
+          offsetSec = pick(rnd, Seq(0L, 120L, 300L, 600L)),
+          atSec = if (rnd.nextInt(5) == 0) Some(T - 300L) else None)
+        val node =
+          if (rnd.nextBoolean()) Absent(sel)
+          else AbsentOT(sel, pick(rnd, Seq(120L, 400L)))
+        (node, eq.map(_._1).toSet)
       case 10 => // topk/bottomk: row subset, keyset preserved — bare
         // (global ranking) or per-group under by/without
         val (inner, ks0) = genVec(rnd, depth - 1)
@@ -552,13 +669,28 @@ class PromDifferentialSpec extends SparkSpec {
     val atS = if (rnd.nextInt(7) == 0) Some(T - 300L) else None
     val sel = Selector(name, eq = eq, ne = ne, offsetSec = off, atSec = atS,
       re = re, nre = nre)
-    if (rnd.nextBoolean()) (sel, Full)
+    if (rnd.nextInt(8) == 0) (TimestampFn(sel), Full)
+    else if (rnd.nextBoolean()) (sel, Full)
     else {
       val fn = pick(rnd, Seq("count", "sum", "min", "max", "avg", "last"))
       val w = pick(rnd, Seq(120L, 400L, 1500L))
       (OverTime(fn, sel, w), Full)
     }
   }
+
+  /** A by/without clause: by, without, or neither, one in three each. */
+  private def genGrouping(rnd: scala.util.Random): (Seq[String], Seq[String]) =
+    rnd.nextInt(3) match {
+      case 0 => (pick(rnd, Seq(Seq("user"), Seq("k"), Seq("user", "cl"))), Nil)
+      case 1 => (Nil, pick(rnd, Seq(Seq("k"), Seq("cl"))))
+      case _ => (Nil, Nil)
+    }
+
+  private def groupKeys(ks: Set[String], by: Seq[String],
+      without: Seq[String]): Set[String] =
+    if (by.nonEmpty) ks.intersect(by.toSet)
+    else if (without.nonEmpty) ks -- without
+    else Set.empty
 
   private def pick[A](rnd: scala.util.Random, xs: Seq[A]): A =
     xs(rnd.nextInt(xs.size))
@@ -582,13 +714,39 @@ class PromDifferentialSpec extends SparkSpec {
       .map { case (k, v) => s""""$k":"$v"""" }
       .mkString("{", ",", "}")
 
+  /** The node kinds of a tree, by class name. */
+  private def kinds(x: Any): Set[String] = x match {
+    case e: Expr with Product =>
+      e.productIterator.flatMap(kinds(_)).toSet + e.getClass.getSimpleName
+    case o: Option[_] => o.toSet.flatMap(kinds)
+    case xs: Seq[_] => xs.toSet.flatMap(kinds)
+    case _ => Set.empty
+  }
+
+  /** The nodes the generator gained with the one-point-grid evaluator:
+    * each must appear in at least three generated cases, so neither pass
+    * can leave them untested.
+    */
+  private val newKinds = Set("AggQuantile", "CountValues", "LabelJoin",
+    "LabelReplace", "TimestampFn", "Absent", "AbsentOT")
+
+  private def assertCovered(seen: Seq[Set[String]]): Unit =
+    for (k <- newKinds) {
+      val hits = seen.count(_.contains(k))
+      // scaled down for a short GRAFT_DIFF_N run
+      assert(hits >= math.min(3, seen.size / 50),
+        s"only $hits generated cases contain $k")
+    }
+
   test("500 generated expressions: engine == naive model, bit-for-bit") {
     val n = sys.env.get("GRAFT_DIFF_N").map(_.toInt).getOrElse(500)
     val rnd = new scala.util.Random(20260816L)
     var checked = 0
     var nonEmpty = 0
+    val seen = Seq.newBuilder[Set[String]]
     while (checked < n) {
       val ast = genTop(rnd)
+      seen += kinds(ast)
       val q = render(ast, 0)
       val parsed =
         try PromParser.parse(q)
@@ -615,6 +773,7 @@ class PromDifferentialSpec extends SparkSpec {
     // a generator drifting into all-empty vectors would pass vacuously
     assert(nonEmpty > n / 2,
       s"only $nonEmpty/$n cases produced non-empty results - fixture or generator drifted")
+    assertCovered(seen.result())
   }
 
   test("250 generated expressions on the grid: engine == per-point naive") {
@@ -630,8 +789,10 @@ class PromDifferentialSpec extends SparkSpec {
     val rnd = new scala.util.Random(18262026L)
     var checked = 0
     var nonEmpty = 0
+    val seen = Seq.newBuilder[Set[String]]
     while (checked < n) {
       val ast = genTop(rnd)
+      seen += kinds(ast)
       val q = render(ast, 0)
       val parsed = PromParser.parse(q)
       assert(parsed == ast,
@@ -651,5 +812,6 @@ class PromDifferentialSpec extends SparkSpec {
     }
     assert(nonEmpty > n / 2,
       s"only $nonEmpty/$n grid cases produced non-empty results - fixture or generator drifted")
+    assertCovered(seen.result())
   }
 }

@@ -1447,4 +1447,65 @@ class PromEvalSpec extends SparkSpec {
     assert(graft.promql.PromEval.evalInstant(solo,
       graft.promql.PromParser.parse("irate(c[1h])"), 1000L).count() == 0)
   }
+
+  test("topk/bottomk: NaN never beats a number, instant and grid, global and grouped") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // one sample at 390 is visible at 400, 500 and 600 (lookback 300)
+    val m = Seq(("m", Map("s" -> "a", "grp" -> "x"), 1.0),
+      ("m", Map("s" -> "b", "grp" -> "x"), Double.NaN),
+      ("m", Map("s" -> "c", "grp" -> "y"), 3.0),
+      ("m", Map("s" -> "d", "grp" -> "y"), Double.NaN))
+      .toDF("metric_name", "labels", "value")
+      .withColumn("timestamp", timestamp_seconds(lit(390L)))
+    def series(rows: Array[org.apache.spark.sql.Row]): Set[String] =
+      rows.map(r => """"s":"(.)"""".r.findFirstMatchIn(r.getAs[String]("skey"))
+        .get.group(1)).toSet
+    val cases = Seq(
+      "topk(1, m)" -> Set("c"), "bottomk(1, m)" -> Set("a"),
+      "topk(2, m)" -> Set("a", "c"), "bottomk(2, m)" -> Set("a", "c"),
+      // NaNs come last, skey breaking their tie
+      "topk(3, m)" -> Set("a", "b", "c"), "bottomk(3, m)" -> Set("a", "b", "c"),
+      "topk by (grp) (1, m)" -> Set("a", "c"),
+      "bottomk by (grp) (1, m)" -> Set("a", "c"),
+      "topk without (s) (1, m)" -> Set("a", "c"))
+    for ((q, want) <- cases) {
+      val expr = graft.promql.PromParser.parse(q)
+      val inst = graft.promql.PromEval.evalInstant(m, expr, 500L).collect()
+      assert(series(inst) == want && inst.length == want.size, s"instant $q")
+      val grid = graft.promql.PromEval.evalGrid(m, expr, 400L, 600L, 100L, 300L)
+        .collect()
+      for (g <- Seq(400L, 500L, 600L)) {
+        val at = grid.filter(_.getAs[Long]("g") == g)
+        assert(series(at) == want && at.length == want.size, s"grid $q at $g")
+      }
+    }
+  }
+
+  test("range quantile across series: every grid point equals the one-point evaluation") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 12 h of 15-minute samples for 4 clusters × 3 users, each series
+    // rising at its own rate, so every point's quantile differs
+    val e0 = 30 * 3600L
+    val m = (for (i <- 0 until 48; c <- 0 until 4; u <- 0 until 3) yield
+      ("x", Map("cluster_name" -> s"c$c", "user" -> s"u$u"),
+        (i * (c + 1) + u).toDouble, e0 + i * 900L))
+      .toDF("metric_name", "labels", "value", "es")
+      .withColumn("timestamp", timestamp_seconds(col("es")))
+    val expr = graft.promql.PromParser.parse(
+      "quantile(0.9, max by (cluster_name) (max_over_time(x[6h])))")
+    val (g0, g1, step) = (e0 + 6 * 3600L, e0 + 12 * 3600L, 3600L)
+    val grid = graft.promql.PromEval.evalGrid(m, expr, g0, g1, step, 300L)
+      .collect()
+      .map(r => (r.getAs[Long]("g"), r.getAs[String]("skey"), r.getAs[Double]("value")))
+      .toSet
+    val points = (g0 to g1 by step).map { g =>
+      graft.promql.PromEval.evalInstant(m, expr, g, 300L).collect()
+        .map(r => (g, r.getAs[String]("skey"), r.getAs[Double]("value"))).toSet
+    }
+    assert(points.forall(_.size == 1), points)
+    assert(points.map(_.head._3).distinct.size == points.size, points)
+    assert(grid == points.reduce(_ ++ _))
+  }
 }
