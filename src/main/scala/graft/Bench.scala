@@ -179,12 +179,9 @@ object Bench {
     // attributed (or not) to checkpoint placement.
     System.err.println(s"BENCH TMPDIR java.io.tmpdir=${System.getProperty("java.io.tmpdir")} " +
       s"spark.local.dir=${System.getProperty("spark.local.dir", "(unset)")}")
-    // SPARK_GRAFT_ONLY=name1,name2 (or globs such as 'promql_parsed_*')
-    // restricts the run to a subset — an iteration aid for profiling one
-    // query's steady-state cost without paying the full 200-query pass.
-    // The official driver run sets no filter and times everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val ordered = only.fold(select(Seq("*")))(select)
+    // always the full pack; `graft.Trace <name|glob>` profiles a subset
+    // over this same run path
+    val ordered = select(Seq("*"))
     val runner = new Runner(spark, sfDir)
     ordered.foreach { case (name, fn) => runner.warm(name, fn) }
     // Two timed runs per query, report the min: single-run numbers at
@@ -252,7 +249,7 @@ object Bench {
     // because its own regression moves the total far less than itself.
     val (ledger, budgetBase, ledgerTotal) = readLedger()
     val totalAbs = results.map(t => math.abs(t._2)).sum
-    val inflation = ledgerTotal.filter(t => t > 0 && only.isEmpty)
+    val inflation = ledgerTotal.filter(_ > 0)
       .map(t => math.max(1.0, totalAbs / t)).getOrElse(1.0)
     results.sortBy(-_._2).foreach { case (n, v) =>
       val budget = inflation * (ledger.get(n) match {
@@ -282,10 +279,8 @@ object Bench {
     // the official-vs-standalone inflation factor, recorded per run
     // instead of cited from memory: this run's total over the ledger's
     // standalone-median total — the margin analysis reads it straight
-    // from BENCH_rN.json. Absent when no ledger exists or when
-    // SPARK_GRAFT_ONLY subset the pack (a subset total over the
-    // full-pack median is not a ratio of anything).
-    val ratioJson = ledgerTotal.filter(t => t > 0 && only.isEmpty)
+    // from BENCH_rN.json. Absent when no ledger exists.
+    val ratioJson = ledgerTotal.filter(_ > 0)
       .map(t => s""","ledger_ratio":${ms(total / t)}""").getOrElse("")
     // Round calibration evidence (round-16 verdict item 5): each round
     // records its box-factor measurement (the previous round's UNCHANGED

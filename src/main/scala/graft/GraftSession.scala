@@ -41,8 +41,7 @@ object GraftSession {
   def configure(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true")) // A/B lever, default on
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // AQE's parallelismFirst coalescing respects only minPartitionSize
       // (it ignores the advisory target), and the 1 MiB default collapses
@@ -53,8 +52,7 @@ object GraftSession {
       // At cluster scale partitions sit near the 64 MiB advisory size, so
       // a 64 KiB floor never binds — this is purely the small-shuffle
       // parallelism guard, the AQE twin of Parallelism.widen's scan floor.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_PART", "64k")) // A/B lever
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.files.maxPartitionBytes", "268435456")
@@ -68,11 +66,10 @@ object GraftSession {
       // session-cached fact frame at sf0.1 that tax is ~12% of scan+agg
       // time (in-JVM interleaved A/B, 40 scans per layout: ratio 0.875;
       // the full-pack effect sits inside the box's noise band). The
-      // harness box trades abundant memory for that CPU; a
-      // memory-constrained deployment flips it back per session
-      // (GRAFT_CACHE_COMPRESS=true) exactly like sizing a real pool.
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("GRAFT_CACHE_COMPRESS", "false"))
+      // harness box trades abundant memory for that CPU; it is a runtime
+      // SQL conf, so a memory-constrained deployment sets it back to true
+      // per session (`spark.conf.set`) exactly like sizing a real pool.
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")

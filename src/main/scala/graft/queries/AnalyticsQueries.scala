@@ -748,10 +748,8 @@ object AnalyticsQueries {
         // — the dominant share of the gates' addBatch floor. Local-only;
         // a real HDFS/S3 deployment keeps the stock manager by not
         // setting this.
-        // GRAFT_CKPT_FM=default restores the stock manager for A/B.
-        if (!sys.env.get("GRAFT_CKPT_FM").contains("default"))
-          s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-            "org.apache.spark.sql.execution.streaming.graft.GraftLocalCheckpointFileManager")
+        s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+          "org.apache.spark.sql.execution.streaming.graft.GraftLocalCheckpointFileManager")
         // Spark 4.1 wraps every checkpoint manager in
         // ChecksumCheckpointFileManager by default: each commit file
         // (offset WAL, commit log, state deltas) gains a `.checksum`
@@ -760,10 +758,9 @@ object AnalyticsQueries {
         // bit-rot on long-lived remote checkpoints; these gates'
         // checkpoints are per-run scratch on local tmpfs, deleted
         // minutes later, so the tax buys nothing here. Local-only, same
-        // scope as the NIO manager above. GRAFT_CKPT_CRC=on for A/B.
-        if (!sys.env.get("GRAFT_CKPT_CRC").contains("on"))
-          s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            "false")
+        // scope as the NIO manager above.
+        s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
+          "false")
         // State store: Spark's default HDFS-backed provider. Spark 4's
         // RocksDBStateStoreProvider cuts the per-commit cost at LARGE
         // state; measured on the ten gates at sf0.1, these fixtures keep
@@ -787,20 +784,18 @@ object AnalyticsQueries {
     withStreamSession(spark)(identity)
 
   /** Terminal sink for a stream gate: run the streaming frame to
-    * completion under AvailableNow and return the emitted rows. Default
-    * is the MEMORY sink: a gate's evidence is its stateful semantics —
+    * completion under AvailableNow and return the emitted rows. It is
+    * the MEMORY sink: a gate's evidence is its stateful semantics —
     * watermarks, state merge, emission contract — which are
     * sink-agnostic, while the parquet file-sink pays a per-micro-batch
     * file materialization + exactly-once metadata-log commit that is
     * pure harness overhead at fixture size (gate outputs are hundreds
     * of rows, so the sink's driver-side table is node-sized by design).
-    * `GRAFT_STREAM_SINK=parquet` flips every gate back to the
-    * production file sink in one env var (the stream≡batch hashes are
-    * sink-independent — same rows either way). The one stream whose
-    * sink IS its evidence — [[graft.streaming.StreamingIngest]]'s
-    * foreachBatch idempotent partition-overwrite — is not a gate and
-    * does not route through here; StreamingSpec's idempotent-ingest
-    * test keeps that file-sink path exercised in CI either way.
+    * The one stream whose sink IS its evidence —
+    * [[graft.streaming.StreamingIngest]]'s foreachBatch idempotent
+    * partition-overwrite — is not a gate and does not route through
+    * here; StreamingSpec's idempotent-ingest test is the file-sink path
+    * CI exercises.
     * (An earlier revision of this note wrongly attributed the
     * foreachBatch sink to the cdc_merge GATE; that gate sinks like
     * every other.)
@@ -815,31 +810,24 @@ object AnalyticsQueries {
   }
   private def gateSink(ss: SparkSession, df: DataFrame,
       work: String): DataFrame = {
-    val w = df.writeStream
+    val qn = s"gate_sink_${gateSeq.incrementAndGet()}"
+    df.writeStream
       .option("checkpointLocation", s"$work/cp")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    if (sys.env.get("GRAFT_STREAM_SINK").contains("parquet")) {
-      w.format("parquet").option("path", s"$work/out")
-        .start().awaitTermination()
-      ss.read.parquet(s"$work/out")
-    } else {
-      val qn = s"gate_sink_${gateSeq.incrementAndGet()}"
-      w.format("memory").queryName(qn).start().awaitTermination()
-      // the gate's rows now live in the in-memory sink table; the
-      // checkpoint is a COMPLETED AvailableNow run's scratch. Delete it
-      // so repeated gate calls (bench warmup + two timed passes, memo-
-      // discarded artifact rebuilds) don't accumulate orphan temp dirs
-      // for the life of the session (round-16 advice item). The parquet
-      // path above keeps `work` — its output lives under it.
-      deleteRecursively(new java.io.File(work))
-      // The frame holds the resolved sink plan, not the name, so the
-      // view can go now: left registered, every gate call would keep
-      // its rows and a catalog entry for the life of the session.
-      val rows = ss.table(qn)
-      ss.catalog.dropTempView(qn)
-      rows
-    }
+      .format("memory").queryName(qn).start().awaitTermination()
+    // the gate's rows now live in the in-memory sink table; the
+    // checkpoint is a COMPLETED AvailableNow run's scratch. Delete it
+    // so repeated gate calls (bench warmup + two timed passes, memo-
+    // discarded artifact rebuilds) don't accumulate orphan temp dirs
+    // for the life of the session (round-16 advice item).
+    deleteRecursively(new java.io.File(work))
+    // The frame holds the resolved sink plan, not the name, so the
+    // view can go now: left registered, every gate call would keep
+    // its rows and a catalog entry for the life of the session.
+    val rows = ss.table(qn)
+    ss.catalog.dropTempView(qn)
+    rows
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -83,8 +83,8 @@ object PromQueries {
     val ks = keys.mkString(", ")
     val res =
       if (kind == "delta")
-        """CAST((max(struct_pack(e := e, vd := vd))).vd
-          |              - (min(struct_pack(e := e, vd := vd))).vd AS DOUBLE) AS res""".stripMargin
+        """CAST(last(vd ORDER BY e, vd)
+          |              - first(vd ORDER BY e, vd) AS DOUBLE) AS res""".stripMargin
       else "CAST(sum(delta) AS DOUBLE) AS res"
     val rate = if (kind == "rate") s" / ${windowSec}.0" else ""
     val zeroCap =
@@ -98,7 +98,7 @@ object PromQueries {
     val (lastCte, ds) = if (kind == "delta") ("x", "ds1") else ("y", "ds2")
     s""", agg AS (
        |  SELECT $ks, count(*) AS n, min(e) AS fe, max(e) AS le,
-       |         (min(struct_pack(e := e, vd := vd))).vd AS fv,
+       |         first(vd ORDER BY e, vd) AS fv,
        |         $res
        |  FROM d GROUP BY $ks HAVING max(e) - min(e) > 0
        |), f AS (

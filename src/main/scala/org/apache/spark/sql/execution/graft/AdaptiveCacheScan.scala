@@ -78,15 +78,10 @@ case class GraftCachedScanExec(delegate: InMemoryTableScanExec)
 /** Injected via `SparkSessionExtensions.injectQueryStagePrepRule`; runs
   * on the physical plan before AQE creates query stages (and on every
   * re-optimized plan — hence idempotent by construction: the transform
-  * only matches bare scans). `GRAFT_CACHED_SCAN_WRAP=off` disables it
-  * for A/B measurement.
+  * only matches bare scans).
   */
 case class GraftWrapCachedScans() extends Rule[SparkPlan] {
-  private val enabled =
-    !sys.env.get("GRAFT_CACHED_SCAN_WRAP").contains("off")
-  override def apply(plan: SparkPlan): SparkPlan =
-    if (!enabled) plan
-    else plan.transformUp {
-      case i: InMemoryTableScanExec => GraftCachedScanExec(i)
-    }
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case i: InMemoryTableScanExec => GraftCachedScanExec(i)
+  }
 }

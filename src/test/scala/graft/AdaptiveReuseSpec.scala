@@ -14,7 +14,13 @@ import org.apache.spark.sql.functions._
 class AdaptiveReuseSpec extends SparkSpec {
 
   test("duplicated aggregation over a persisted frame reuses one exchange under AQE") {
-    assume(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    // the GraftSession settings this plan shape depends on: AQE on, the
+    // small-shuffle coalescing floor, and the uncompressed columnar cache
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
+    assert(spark.conf.get(
+      "spark.sql.inMemoryColumnarStorage.compressed") == "false")
     val base = spark.range(0, 100000)
       .select((col("id") % 997).as("k"), (col("id") * 3).as("v"))
       .persist()

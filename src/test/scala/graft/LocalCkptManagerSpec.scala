@@ -59,6 +59,9 @@ class LocalCkptManagerSpec extends SparkSpec {
     assert(ss ne spark, "the stream session must be a dedicated child")
     assert(ss.conf.getOption(
       "spark.sql.streaming.checkpointFileManagerClass").contains(cls))
+    // and skips the per-commit `.checksum` sibling files
+    assert(ss.conf.get(
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false")
     // parent conf does NOT carry it: the opt-in is scoped to the gates
     assert(!spark.sparkContext.getConf
       .contains("spark.sql.streaming.checkpointFileManagerClass"))

@@ -107,6 +107,16 @@ if ! git diff --quiet HEAD -- PLANS.md; then
   exit 4
 fi
 
+# One configuration: the engine reads no GRAFT_* environment lever. The
+# settings an A/B once picked are literals in the code; only deployment
+# and placement settings (SPARK_GRAFT_*, SPARK_DRIVER_MEM, and
+# GRAFT_NO_SHM in build.sbt) come from the environment.
+echo "== no GRAFT_* env levers in src/main"
+if grep -rnE 'sys\.env[^"]*"GRAFT_' src/main; then
+  echo "src/main reads a GRAFT_* environment variable (above): make it a literal"
+  exit 6
+fi
+
 echo "== sbt test"
 sbt -batch test
 
